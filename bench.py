@@ -1,26 +1,15 @@
 """Benchmark harness: runs the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``; the FINAL stdout line is the
+``local[$SPARK_GRAFT_CPUS]`` and prints ONE stdout line, the
 driver-contract JSON record
 ``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
-"sf": ...}`` (sentinel ratios go to a PRECEDING line + side file --
-see ``emit`` / ``LINE_BUDGET``).
+"sf": ...}`` (see ``emit`` / ``LINE_BUDGET``).
 
 Each query executes fully via the noop sink (no driver collect of
 wide results -- measures the distributed plan, not row serialization).
-
-INTERLEAVED SENTINEL (r10 VERDICT item 3): same-code bench totals on
-this shared VM span 32.5-70.0 s across hours (BENCH_NOTES.md), so a
-hot driver run can FLAG rows a quiet box exonerates.  The structural
-fix: alternate every timed rep with a fixed SENTINEL query and record
-each row's min-over-reps ``row_time / adjacent_sentinel_time`` ratio.
-Host load within one rep hits numerator and denominator together, so
-the ratio is load-invariant PER-REP -- not merely per-run like the
-total-share test -- and ``tools/adjudicate_bench.py`` prefers it when
-both the sample and the envelope carry it.  Default ON
-(``SPARK_GRAFT_BENCH_SENTINEL=0`` disables); sentinel executions are
-NOT added to the reported total, so ``value`` stays comparable across
-rounds.
+The repo's per-layer benchmark (declaration vs execution,
+per-operator self time, stage metrics) is ``perfbench/run.py``; this
+harness only reports min-of-reps wall time per row.
 """
 
 from __future__ import annotations
@@ -94,90 +83,37 @@ HEADLINE = [
     "j6_pip_raycast_grid",
 ]
 
-#: the interleaved sentinel: cheap (~0.12 s quiet median), stable,
-#: and exercises the same scan + shuffle machinery host noise hits
-#: (TakeOrderedAndProject over events).  Its OWN row's sentinel ratio
-#: is meaningless (≈1 by construction) -- the adjudicator skips the
-#: sentinel test for the row named here and falls through to the
-#: total-share test.
-SENTINEL = "o3_global_topk"
-
-#: DRIVER-CONTRACT LINE BUDGET (r11 VERDICT item 1): the driver
-#: captures only the LAST ~2000 chars of stdout and parses the FINAL
-#: line as the round's official bench record.  r11 appended the
-#: 53-entry sentinel-ratio block to that same line, pushing its head
-#: outside the capture window -- BENCH_r11.json came back
-#: ``parsed: null`` and the round lost its official total.  The fix,
-#: pinned by tests/test_bench_emit.py: the final printed line carries
-#: ONLY the contract fields (metric/value/unit/queries/sf), compact
-#: separators, 2-decimal timings, and must stay under this budget;
-#: the sentinel block goes to its own PRECEDING line plus a side
-#: file; if the registry ever outgrows the budget, per-query detail
-#: spills to a side file and the line keeps the slowest rows inline
-#: plus a ``queries_file`` pointer.
+#: DRIVER-CONTRACT LINE BUDGET: the driver captures only the LAST
+#: ~2000 chars of stdout and parses the FINAL line as the round's
+#: official bench record (BENCH_r11.json came back
+#: ``parsed: null`` when an extra block pushed the line's head outside
+#: that window).  Pinned by tests/test_bench_emit.py: the printed line
+#: carries ONLY the contract fields (metric/value/unit/queries/sf),
+#: compact separators, 2-decimal timings, and stays under this budget;
+#: if the registry ever outgrows it, per-query detail spills to a side
+#: file and the line keeps the slowest rows inline plus a
+#: ``queries_file`` pointer.
 LINE_BUDGET = 1850
-SENTINEL_FILE = "BENCH_SENTINEL.json"
 QUERIES_FILE = "BENCH_QUERIES.json"
-
-
-def record_ratio(sratios: dict, name: str, best_ratio: float) -> None:
-    """Record a row's min sentinel ratio ONLY when finite.
-
-    ADVICE r11 (bench.py:398): if every sentinel rep of a row
-    returned 0.0 (the ``if s:`` truthiness guard skips those reps),
-    ``best_ratio`` stays ``float('inf')`` and ``json.dumps`` would
-    emit bare ``Infinity`` -- invalid strict JSON that breaks every
-    downstream consumer (bench_envelope.py, adjudicate_bench.py).
-    """
-    if best_ratio != float("inf") and best_ratio == best_ratio:
-        sratios[name] = round(best_ratio, 4)
 
 
 def emit(out: dict, stream=None, root: str | None = None,
          budget: int = LINE_BUDGET) -> str:
-    """Print the bench record so the FINAL stdout line is a
-    self-contained driver-contract JSON line under ``budget`` chars.
+    """Print the bench record as ONE self-contained driver-contract
+    JSON line under ``budget`` chars.
 
-    Order of output: (1) sentinel block, if present, on its own line
-    AND to ``SENTINEL_FILE`` next to this script (the committed
-    artifact adjudication reads when the driver's tail truncates the
-    stdout copy); (2) the contract line.  Timings are rounded to 2
-    decimals on the wire -- adjudication reads ratios/envelopes from
-    the side artifacts, and 10 ms resolution is far inside host
-    noise on this shared VM (BENCH_NOTES.md: same-code totals span
-    32-70 s).  If the inline ``queries`` dict would overflow the
-    budget, the FULL dict goes to ``QUERIES_FILE`` and the line
-    keeps the slowest rows plus ``queries_file``/``queries_elided``
-    markers (the judge's "summary+pointer shape").
+    Timings are rounded to 2 decimals on the wire: 10 ms resolution is
+    far inside run-to-run spread on a shared host (BENCH_NOTES.md).  If
+    the inline ``queries`` dict would overflow the budget, the FULL
+    dict goes to ``QUERIES_FILE`` and the line keeps the slowest rows
+    plus ``queries_file``/``queries_elided`` markers.
 
-    Returns the contract line (for tests).
+    Returns the printed line (for tests).
     """
     stream = stream if stream is not None else sys.stdout
     root = root or os.path.dirname(os.path.abspath(__file__))
     compact = {"separators": (",", ":"), "allow_nan": False}
     out = dict(out)
-    sentinel = out.pop("sentinel", None)
-    if sentinel is not None:
-        # the run's total rides along as a fingerprint: the side file
-        # is overwritten by EVERY bench run in this repo (envelope
-        # refreshes included), so a consumer merging it into a saved
-        # contract record (tools/adjudicate_bench.py) must be able to
-        # check it came from the SAME run
-        sblob = {"sentinel": sentinel}
-        if "value" in out:
-            sblob["value"] = out["value"]
-        try:
-            blob = json.dumps(sblob, **compact)
-        except ValueError:
-            # a non-finite ratio slipped past record_ratio: drop the
-            # block rather than poison the stream (strict-JSON
-            # consumers) -- the contract line must still go out
-            print("bench: sentinel block had non-finite values, "
-                  "dropped", file=sys.stderr)
-        else:
-            with open(os.path.join(root, SENTINEL_FILE), "w") as f:
-                f.write(blob + "\n")
-            print(blob, file=stream)
     out["queries"] = {k: round(v, 2) for k, v in out["queries"].items()}
     line = json.dumps(out, **compact)
     if len(line) > budget:
@@ -199,24 +135,12 @@ def emit(out: dict, stream=None, root: str | None = None,
 
 def parse_stdout(text: str, root: str | None = None) -> dict:
     """Reconstruct the FULL bench record from one run's stdout: the
-    final JSON line is the driver-contract record; a preceding
-    ``{"sentinel": ...}`` line (same run -- matching ``value``
-    fingerprint when both carry one) is merged back in; a
-    ``queries_file`` pointer is resolved against ``root``.  The
-    inverse of ``emit`` -- tools/bench_envelope.py uses it so the
-    aggregated envelopes keep carrying sentinel ratios."""
+    final JSON line is the driver-contract record, and a
+    ``queries_file`` pointer is resolved against ``root``.  The inverse
+    of ``emit`` (tools/run_bench.py writes its result to a file)."""
     root = root or os.path.dirname(os.path.abspath(__file__))
     lines = [l for l in text.splitlines() if l.startswith("{")]
     rec = json.loads(lines[-1])
-    for l in lines[:-1]:
-        try:
-            d = json.loads(l)
-        except ValueError:
-            continue
-        if "sentinel" in d and (
-            "value" not in d or d["value"] == rec.get("value")
-        ):
-            rec["sentinel"] = d["sentinel"]
     qf = rec.pop("queries_file", None)
     if qf is not None:
         qp = qf if os.path.isabs(qf) else os.path.join(root, qf)
@@ -226,9 +150,29 @@ def parse_stdout(text: str, root: str | None = None) -> dict:
     return rec
 
 
-def bench_storage(
-    spark, sf_dir: str, reps: int, sentinel_fn=None
-) -> "tuple[dict[str, float], dict[str, float]]":
+def release_cached(spark) -> None:
+    """Unpersist every persisted RDD in the session (PER-QUERY
+    ISOLATION).  Several queries pin executor storage memory via
+    localCheckpoint (LSH signatures, the nightly's staged fact table);
+    their RDDs are only freed when the Python refs die AND the
+    ContextCleaner runs, so without this a small query timed late in
+    the sequence pays earlier queries' cache pressure (the r3
+    nine-query regression cluster: every regressed query ran after a
+    checkpointing one in the warm pass).  Call it only between timed
+    runs that each build a fresh plan, so nothing unpersisted here is
+    ever reused."""
+    import gc
+
+    gc.collect()
+    try:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        for rid in list(jmap.keySet().toArray()):
+            jmap.get(rid).unpersist(False)
+    except Exception:  # noqa: BLE001 -- isolation is best-effort
+        pass
+
+
+def bench_storage(spark, sf_dir: str, reps: int) -> "dict[str, float]":
     """SECOND TIER: the TxTable storage layer's RMW / pruned-scan /
     stream-rollup latency, timed on the OPERATION itself (each op is
     an eager atomic commit, so the headline tier's declare-then-noop
@@ -241,29 +185,25 @@ def bench_storage(
 
     tx_stream_drain reads as (Spark streaming bootstrap) + (source
     work): a DO-NOTHING Python streaming source costs ~1.5 s per
-    availableNow query on this box (per-query planner process spawn +
-    offset/commit WAL -- tools/ab_stream_floor.py, committed as
-    BENCH_STREAM_FLOOR.json; our planner adds ~0.04 s on top), and
-    the availableNow fallback runs ONE micro-batch for the whole
-    backlog, so there is no per-version overhead to coalesce.  The
-    floor amortizes to zero in a long-running consumer; a one-shot
-    drain benchmark pays it in full.  tx_stream_drain_steady is that
-    amortized form made a row: the same consumer shape drains an
-    8-commit backlog paced to one commit per micro-batch, and the
-    per-batch MARGINAL cost -- measured bootstrap-free by
-    tools/ab_stream_steady.py as (t@16 commits - t@8)/8, committed
-    as BENCH_STREAM_STEADY.json -- is 0.78 s (0.28 s stateless),
-    2-5x under the bootstrap the one-shot row is dominated by.  Most
-    of that stateful-vs-stateless gap is state-store commit traffic,
-    O(state partitions) per micro-batch, so both drain rows right-size
-    the rollup's state to 8 partitions (<=12 groups live in it)
-    instead of inheriting the 32 batch-shuffle default (0.37 s/batch
-    in the A/B's rollup4 variant) -- streaming/sizing.py documents
-    the rule and the measured ~2x per-batch effect.  The rollup
-    projects its two
-    columns at the source (the r6 `columns` option -- parquet I/O and
-    Arrow transport skip the rest), which is how a real change-feed
-    consumer should read."""
+    availableNow query on a 32-core host (per-query planner process
+    spawn + offset/commit WAL; committed as BENCH_STREAM_FLOOR.json --
+    our planner adds ~0.04 s on top), and the availableNow fallback
+    runs ONE micro-batch for the whole backlog, so there is no
+    per-version overhead to coalesce.  The floor amortizes to zero in
+    a long-running consumer; a one-shot drain benchmark pays it in
+    full.  tx_stream_drain_steady is that amortized form made a row:
+    the same consumer shape drains an 8-commit backlog paced to one
+    commit per micro-batch, and the per-batch MARGINAL cost, measured
+    bootstrap-free as (t@16 commits - t@8)/8 and committed as
+    BENCH_STREAM_STEADY.json, is 0.78 s (0.28 s stateless), 2-5x
+    under the bootstrap the one-shot row is dominated by.  Most of
+    that stateful-vs-stateless gap is state-store commit traffic,
+    O(state partitions) per micro-batch, so both drain rows size the
+    rollup's state from its group cardinality instead of inheriting
+    the 32 batch-shuffle default (0.37 s/batch in the same artifact's
+    rollup4 variant) -- streaming/sizing.py documents the rule.  The rollup projects its two columns at the source (the
+    r6 `columns` option -- parquet I/O and Arrow transport skip the
+    rest), which is how a real change-feed consumer should read."""
     import shutil
     import tempfile
 
@@ -288,12 +228,8 @@ def bench_storage(
     )
     lo, hi = "1994-01-01", "1994-12-31"
     samples: dict[str, list[float]] = {}
-    sratios: dict[str, list[float]] = {}
 
     def rec(name, fn):
-        # interleaved sentinel: one adjacent sentinel execution per
-        # timed op, so each rep carries its own load-invariant ratio
-        s = sentinel_fn() if sentinel_fn is not None else None
         spark.sparkContext.setJobDescription(f"bench-storage: {name}")
         try:
             t0 = time.time()
@@ -302,8 +238,6 @@ def bench_storage(
         finally:
             spark.sparkContext.setJobDescription(None)
         samples.setdefault(name, []).append(dt)
-        if s:
-            sratios.setdefault(name, []).append(dt / s)
 
     for _ in range(reps):
         base = tempfile.mkdtemp(prefix="benchtx_")
@@ -430,10 +364,7 @@ def bench_storage(
             )
         finally:
             shutil.rmtree(base, ignore_errors=True)
-    return (
-        {k: round(min(v), 3) for k, v in samples.items()},
-        {k: round(min(v), 4) for k, v in sratios.items()},
-    )
+    return {k: round(min(v), 3) for k, v in samples.items()}
 
 
 def main() -> None:
@@ -469,7 +400,7 @@ def main() -> None:
         # label the jobs (guide §1.5) so a UI-enabled run maps stages
         # back to rows; a thread-local setter, microseconds, untimed.
         # try/finally: a raising run must not leak this row's label
-        # onto later rows' (or the sentinel's) jobs
+        # onto later rows' jobs
         spark.sparkContext.setJobDescription(f"bench: {name}")
         try:
             t0 = time.time()
@@ -479,32 +410,6 @@ def main() -> None:
             spark.sparkContext.setJobDescription(None)
         return dt
 
-    def release_cached():
-        # PER-QUERY ISOLATION: several queries pin executor
-        # storage memory via localCheckpoint (LSH signatures, the
-        # nightly's staged fact table); their RDDs are only freed when
-        # the Python refs die AND the ContextCleaner runs, so without
-        # this a small query timed late in the sequence pays earlier
-        # queries' cache pressure (the r3 nine-query regression
-        # cluster: every regressed query ran after a checkpointing one
-        # in the warm pass).  Dead checkpoints only -- each timed rep
-        # builds a fresh plan, so nothing unpersisted here is ever
-        # reused.
-        # SPARK_GRAFT_BENCH_ISOLATE=0 disables the release (the r3
-        # behavior) -- the A/B lever for attributing shifts to cache
-        # pressure vs the isolation change itself (tools/bench_envelope.py)
-        if os.environ.get("SPARK_GRAFT_BENCH_ISOLATE", "1") == "0":
-            return
-        import gc
-
-        gc.collect()
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for rid in list(jmap.keySet().toArray()):
-                jmap.get(rid).unpersist(False)
-        except Exception:  # noqa: BLE001 -- isolation is best-effort
-            pass
-
     # warm pass (untimed): JVM JIT, parquet footers, physical
     # compilation.  Then REPS timed executions per query, reporting the
     # per-query MINIMUM: this box is a shared VM, and min-of-k is the
@@ -513,55 +418,22 @@ def main() -> None:
     for name in names:
         runq(name)
 
-    sentinel_on = (
-        os.environ.get("SPARK_GRAFT_BENCH_SENTINEL", "1") == "1"
-        and SENTINEL in qs
-    )
-
-    def run_sentinel() -> float:
-        df = qs[SENTINEL](spark, sf_dir)
-        spark.sparkContext.setJobDescription("bench: sentinel")
-        try:
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-        finally:
-            spark.sparkContext.setJobDescription(None)
-        return dt
-
-    if sentinel_on:
-        run_sentinel()  # its own warm pass
-
     timings: dict[str, float] = {}
-    sratios: dict[str, float] = {}
     for name in names:
-        release_cached()
-        best, best_ratio = float("inf"), float("inf")
-        for _ in range(reps):
-            s = run_sentinel() if sentinel_on else None
-            t = runq(name)
-            best = min(best, t)
-            if s:
-                best_ratio = min(best_ratio, t / s)
-        timings[name] = round(best, 3)
-        if sentinel_on:
-            record_ratio(sratios, name, best_ratio)
-    release_cached()
-    storage_fn = run_sentinel if sentinel_on else None
-    st_times, st_ratios = bench_storage(spark, sf_dir, reps, storage_fn)
-    timings.update(st_times)
-    sratios.update(st_ratios)
+        release_cached(spark)
+        timings[name] = round(min(runq(name) for _ in range(reps)), 3)
+    release_cached(spark)
+    timings.update(bench_storage(spark, sf_dir, reps))
     total = round(sum(timings.values()), 3)
-    out = {
-        "metric": "steady-state headline-query wall time, noop sink",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-    }
-    if sentinel_on:
-        out["sentinel"] = {"name": SENTINEL, "ratios": sratios}
-    emit(out)
+    emit(
+        {
+            "metric": "steady-state headline-query wall time, noop sink",
+            "value": total,
+            "unit": "sec",
+            "queries": timings,
+            "sf": sf,
+        }
+    )
 
 
 if __name__ == "__main__":

@@ -64,14 +64,14 @@ def register(name: str, sql: str | None):
 #: ``queries()`` in registration order (verified:
 #: CORRECTNESS_r9..r12 are exactly that prefix), so without rotation
 #: the same 50 rows are re-checked every round while the rest never
-#: get a driver-side run.  r13 head: 14 core rows retained from the
-#: frozen 50 (flagship, each §2 family, the scale-critical
-#: spatial/dedup/ANN paths, and the bench sentinel), the TWO rows the
-#: r12 driver sample flagged (txtable_merge_update /
-#: txtable_stream_rollup -- kept in the head so the driver re-audits
-#: them after the r13 determinism investigation), and REGISTRY.md
-#: Tranche 2 (34 never-driver-sampled rows).  Rotate to Tranche 3 in
-#: a later round.  Rows pushed out of the head remain fully
+#: get a driver-side run.  Head after the r13 sample: 14 core rows
+#: retained from the frozen 50 (flagship, each §2 family, the
+#: scale-critical spatial/dedup/ANN paths), the TWO TxTable rows the
+#: r12 and r13 driver samples flagged (txtable_merge_update /
+#: txtable_stream_rollup -- kept in the head until the driver sees
+#: them green), and REGISTRY.md Tranche 1 (34 never-driver-sampled
+#: rows).  Regenerate REGISTRY.md and rotate to the next tranche
+#: once this sample lands.  Rows pushed out of the head remain fully
 #: oracle-twinned and covered by the committed SELFCHECK artifacts
 #: every round.
 _DRIVER_SAMPLE_HEAD = [
@@ -90,44 +90,44 @@ _DRIVER_SAMPLE_HEAD = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "sim_bruteforce_topk",
-    # the two rows the r12 driver sample flagged (re-audit)
+    # the two rows the r12 and r13 driver samples flagged (re-audit)
     "txtable_merge_update",
     "txtable_stream_rollup",
-    # REGISTRY.md Tranche 2 (34 never-driver-sampled rows)
-    "semantic_assignment_drift",
-    "sessionize_events",
-    "text_vocab_topk",
-    "zorder_values",
-    "scd2_user_state",
-    "text_repetition",
-    "pack_token_budget",
-    "mv_incremental_refresh",
-    "windowed_stream_vs_batch",
-    "asof_join_salted_events",
-    "bucketed_colocated_join",
-    "dedup_stream_vs_batch",
-    "filter_above_median_quality",
-    "p12_json_props_extract",
-    "w3_event_interarrival",
-    "q3_shipping_priority",
-    "a11_rollup_grouping_sets",
-    "dedup_editdistance",
-    "w5_running_total",
-    "asof_clustered_timeline",
-    "q14_promo_revenue_ratio",
-    "q2_min_cost_supplier",
-    "txtable_stats_pruned_scan",
-    "split_leakage_safe",
-    "q6_forecast_revenue",
-    "q15_top_supplier",
-    "q7_volume_shipping",
-    "q20_excess_stock_suppliers",
-    "txtable_delete_where",
-    "text_bm25_rank",
-    "doc_chunk_overlap",
-    "pipeline_rag_prep",
-    "gopher_quality_rules",
-    "canonical_keep_best",
+    # REGISTRY.md Tranche 1 (34 never-driver-sampled rows)
+    "dedup_semantic_stream_divergence",
+    "sessionize_stream_vs_batch",
+    "pipeline_corpus_prep",
+    "asof_join_events",
+    "sketch_kmv_distinct",
+    "text_pii_scrub",
+    "rolling_1h_user_value",
+    "sample_temperature",
+    "set_intersect_except",
+    "dedup_minhash_incremental",
+    "mv_signed_refresh",
+    "bloom_prefilter_orders",
+    "embedding_centroids",
+    "w2_pivot_event_counts",
+    "sketch_kmv_grouped",
+    "q5_local_supplier_volume",
+    "q4_order_priority_semi",
+    "a12_ntile_quartiles",
+    "a13_argmax_latest",
+    "dedup_segment_boilerplate",
+    "q16_supplier_count_excluding",
+    "q22_idle_customer_balance",
+    "txtable_mixed_layout_read",
+    "dedup_lsh_quality",
+    "q11_important_stock",
+    "q19_disjunctive_revenue",
+    "q8_market_share",
+    "graph_pagerank_neardup",
+    "txtable_log_checkpoint",
+    "quality_lm_score",
+    "dedup_tfidf_cosine",
+    "sample_dsir_select",
+    "sketch_kmv_overlap",
+    "txtable_occ_rebase",
 ]
 
 

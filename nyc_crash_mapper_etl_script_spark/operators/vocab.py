@@ -83,10 +83,11 @@ def tf_idf(
     # Catalyst clones the tokenize + explode + (doc, token) aggregate
     # into each consumer.  Deliberately NOT materialized: the r12
     # lazy localCheckpoint was A/B'd on the 10x heavy tier (r13,
-    # BENCH_HEAVY_QUARTET_c{32,8}.json) and the recompute form won at
-    # both 32 and 8 cores -- the cloned pass stays fused in codegen,
-    # while the checkpoint pinned a corpus-sized (doc, token, tf)
-    # relation for no gain.
+    # BENCH_HEAVY_QUARTET_c{32,8}.json): at 32 cores the two forms
+    # were within noise (0.78 s recompute vs 0.77 s checkpoint), and
+    # at 8 cores recompute won (0.84 s vs 0.89 s) -- the cloned pass
+    # stays fused in codegen, while the checkpoint pinned a
+    # corpus-sized (doc, token, tf) relation for no clear gain.
     tf = (
         df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token"))
         .groupBy(id_col, "token")

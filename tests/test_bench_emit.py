@@ -1,14 +1,12 @@
-"""Driver-contract pin for bench.py's stdout record (r11 VERDICT
-item 1): the driver captures only the last ~2000 chars of stdout and
-parses the FINAL line as the round's official bench artifact.
-BENCH_r11.json was ``parsed: null`` because the inline sentinel block
-doubled the line past that window.  These tests pin the fix: the
-final line is self-contained, compact, and under LINE_BUDGET at the
-current registry size AND at a projected ~80-row registry; the
-sentinel block rides a separate preceding line + side file; non-
-finite ratios never reach the wire (ADVICE r11 bench.py:398).
+"""Driver-contract pin for bench.py's stdout record: the driver
+captures only the last ~2000 chars of stdout and parses the FINAL
+line as the round's official bench artifact (BENCH_r11.json was
+``parsed: null`` when an extra block doubled the line past that
+window).  These tests pin the contract: bench prints exactly one
+line, self-contained, compact, and under LINE_BUDGET at the current
+registry size AND at a projected ~80-row registry.
 
-No SparkSession needed -- ``emit``/``record_ratio`` are pure.
+No SparkSession needed -- ``emit``/``parse_stdout`` are pure.
 """
 
 import io
@@ -24,21 +22,15 @@ sys.path.insert(
 import bench
 
 
-def _out(names, sentinel=True, t=12.34):
+def _out(names, t=12.34):
     queries = {n: t for n in names}
-    o = {
+    return {
         "metric": "steady-state headline-query wall time, noop sink",
         "value": round(sum(queries.values()), 3),
         "unit": "sec",
         "queries": queries,
         "sf": 0.1,
     }
-    if sentinel:
-        o["sentinel"] = {
-            "name": bench.SENTINEL,
-            "ratios": {n: 1.2345 for n in names},
-        }
-    return o
 
 
 STORAGE_ROWS = [
@@ -59,42 +51,34 @@ def test_final_line_parses_and_fits_current_registry(tmp_path):
     line = bench.emit(
         _out(current_names()), stream=buf, root=str(tmp_path)
     )
-    # the final printed line IS the returned contract line
-    printed = buf.getvalue().rstrip("\n").split("\n")
-    assert printed[-1] == line
+    # a record that fits the budget prints exactly one line: the
+    # returned contract line
+    assert buf.getvalue() == line + "\n"
     rec = json.loads(line)  # parses standalone
     assert len(line) < 1900, len(line)
-    # contract fields all present, sentinel NOT on the final line
     assert set(rec) == {"metric", "value", "unit", "queries", "sf"}
     assert len(rec["queries"]) == len(current_names())
-    # sentinel rode its own PRECEDING line and the side file, value-
-    # fingerprinted to this run so consumers can detect a stale file
-    srec = json.loads(printed[0])
-    assert set(srec) == {"sentinel", "value"}
-    assert srec["value"] == rec["value"]
-    sfile = json.load(open(tmp_path / bench.SENTINEL_FILE))
-    assert srec == sfile
-    assert len(sfile["sentinel"]["ratios"]) == len(current_names())
-    # and parse_stdout inverts the split exactly
-    merged = bench.parse_stdout(buf.getvalue(), root=str(tmp_path))
-    assert merged["sentinel"] == sfile["sentinel"]
-    assert merged["queries"] == rec["queries"]
+    assert not os.path.exists(tmp_path / bench.QUERIES_FILE)
+    # and parse_stdout reads it back unchanged
+    assert bench.parse_stdout(buf.getvalue(), root=str(tmp_path)) == rec
 
 
 def test_final_line_even_inside_2000_char_tail_with_sentinel(tmp_path):
-    """The actual driver failure mode: BOTH lines printed, tail
-    capture keeps the last 2000 chars -- the final line must be fully
-    inside that window (i.e. recoverable by the driver's parse)."""
+    """The actual driver failure mode: the driver keeps only the last
+    2000 chars of stdout -- the final line must be fully inside that
+    window (i.e. recoverable by the driver's parse).  The sentinel
+    line that once preceded it is gone, so the window now holds the
+    whole of stdout."""
     buf = io.StringIO()
-    bench.emit(_out(current_names()), stream=buf, root=str(tmp_path))
+    line = bench.emit(_out(current_names()), stream=buf, root=str(tmp_path))
     tail = buf.getvalue()[-2000:]
     final = tail.rstrip("\n").split("\n")[-1]
-    json.loads(final)
+    assert json.loads(final) == json.loads(line)
 
 
 def test_spill_to_pointer_at_80_rows(tmp_path):
     names = [f"op_{i:02d}_{'x' * 14}" for i in range(80)]  # ~20 chars
-    out = _out(names, sentinel=False)
+    out = _out(names)
     out["queries"] = {n: 10.0 + i / 100 for i, n in enumerate(names)}
     buf = io.StringIO()
     line = bench.emit(out, stream=buf, root=str(tmp_path))
@@ -119,36 +103,15 @@ def test_spill_to_pointer_at_80_rows(tmp_path):
 
 
 def test_no_spill_below_budget(tmp_path):
-    out = _out(["q1", "q2"], sentinel=False)
+    out = _out(["q1", "q2"])
     line = bench.emit(out, stream=io.StringIO(), root=str(tmp_path))
     rec = json.loads(line)
     assert "queries_file" not in rec
     assert not os.path.exists(tmp_path / bench.QUERIES_FILE)
 
 
-def test_record_ratio_drops_nonfinite():
-    """ADVICE r11: all-zero sentinel reps leave best_ratio at inf;
-    bare Infinity in the artifact is invalid strict JSON."""
-    sr = {}
-    bench.record_ratio(sr, "a", float("inf"))
-    bench.record_ratio(sr, "b", float("nan"))
-    bench.record_ratio(sr, "c", 1.23456)
-    assert sr == {"c": 1.2346}
-
-
-def test_emit_drops_nonfinite_sentinel_block(tmp_path):
-    out = _out(["q1"], sentinel=False)
-    out["sentinel"] = {"name": "q1", "ratios": {"q1": float("inf")}}
-    buf = io.StringIO()
-    line = bench.emit(out, stream=buf, root=str(tmp_path))
-    # only the contract line was printed; it parses; no Infinity
-    assert buf.getvalue().rstrip("\n") == line
-    json.loads(line)
-    assert not os.path.exists(tmp_path / bench.SENTINEL_FILE)
-
-
 def test_two_decimal_rounding_on_wire(tmp_path):
-    out = _out(["q1"], sentinel=False)
+    out = _out(["q1"])
     out["queries"] = {"q1": 1.2345}
     rec = json.loads(
         bench.emit(out, stream=io.StringIO(), root=str(tmp_path))
@@ -159,7 +122,7 @@ def test_two_decimal_rounding_on_wire(tmp_path):
 def test_values_finite_assertion():
     # json.dumps(allow_nan=False) is the backstop on the contract
     # line itself: a NaN timing must raise, not print bad JSON
-    out = _out(["q1"], sentinel=False)
+    out = _out(["q1"])
     out["queries"] = {"q1": math.nan}
     try:
         bench.emit(out, stream=io.StringIO(), root="/tmp")
@@ -185,14 +148,13 @@ _timing = st.floats(
 @settings(max_examples=60, deadline=None)
 @given(
     queries=st.dictionaries(_name, _timing, min_size=1, max_size=120),
-    with_sentinel=st.booleans(),
 )
-def test_emit_parse_roundtrip_property(tmp_path_factory, queries, with_sentinel):
+def test_emit_parse_roundtrip_property(tmp_path_factory, queries):
     """For ANY registry shape (1-120 rows, arbitrary names/timings),
     the emitted stdout must (a) end in a standalone-parsable contract
     line under LINE_BUDGET + slack, (b) survive the driver's
     2000-char tail capture, and (c) reconstruct via parse_stdout to
-    the full 2-decimal queries dict plus the sentinel block."""
+    the full 2-decimal queries dict."""
     tmp = tmp_path_factory.mktemp("emit")
     out = {
         "metric": "m",
@@ -201,11 +163,6 @@ def test_emit_parse_roundtrip_property(tmp_path_factory, queries, with_sentinel)
         "queries": dict(queries),
         "sf": 0.1,
     }
-    if with_sentinel:
-        out["sentinel"] = {
-            "name": "s",
-            "ratios": {n: 1.5 for n in queries},
-        }
     buf = io.StringIO()
     line = bench.emit(out, stream=buf, root=str(tmp))
     text = buf.getvalue()
@@ -223,7 +180,5 @@ def test_emit_parse_roundtrip_property(tmp_path_factory, queries, with_sentinel)
         k: round(v, 2) for k, v in queries.items()
     }
     assert merged["value"] == out["value"]
-    if with_sentinel:
-        assert merged["sentinel"]["ratios"] == {n: 1.5 for n in queries}
     # inline or spilled, never both stale: pointer keys never survive
     assert "queries_file" not in merged

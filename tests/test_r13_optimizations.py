@@ -15,6 +15,8 @@ the driver into a single-threaded hash relation (heavy-tier bench:
 
 from __future__ import annotations
 
+import re
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -30,14 +32,18 @@ def test_span_firsts_build_side_is_count_filtered(spark):
         "doc_id long, text string",
     )
     plan = _plan(substring_span_stats(docs, k=40))
-    # the aggregate feeding the join must carry the occurrence count
-    # and a >= 2 filter on it -- that filter is the size bound that
-    # makes the build side duplicate-sized
-    assert "count(1)" in plan, "firsts aggregate lost its occurrence count"
-    assert ">= 2" in plan, (
-        "count >= 2 filter on the firsts aggregate is gone -- the join "
-        "build side is corpus-sized again (driver-side broadcast hazard)"
+    # the firsts aggregate (min(__e) + count(1) per window hash) must
+    # sit DIRECTLY under a Filter keeping its occurrence count >= 2 --
+    # that filter is the size bound that makes the join's build side
+    # duplicate-sized instead of corpus-sized (driver-side broadcast
+    # hazard)
+    firsts_filter = re.compile(
+        r"Filter [^\n]*\b(__c#\d+L?) >= 2\)[^\n]*\n"
+        r"[ :|+-]*HashAggregate\(keys=\[h1#\d+L?, h2#\d+L?\], "
+        r"functions=\[min\(__e#\d+\), count\(1\)\], "
+        r"output=\[[^\]]*, \1\]\)"
     )
+    assert firsts_filter.search(plan), plan
 
 
 def test_span_unique_and_duplicated_windows_account_identically(spark):

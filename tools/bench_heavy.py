@@ -44,6 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import release_cached
 from nyc_crash_mapper_etl_script_spark import harness
 from nyc_crash_mapper_etl_script_spark.schemas import load_table
 from nyc_crash_mapper_etl_script_spark.session import get_spark
@@ -115,21 +116,9 @@ def _timed(spark, label, fn) -> float:
         finally:
             spark.sparkContext.setJobDescription(None)
         best = dt if best is None else min(best, dt)
-        _release(spark)
+        release_cached(spark)
     print(f"{label}: {best:.2f}s")
     return round(best, 3)
-
-
-def _release(spark) -> None:
-    import gc
-
-    gc.collect()
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            jmap.get(rid).unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
 
 
 def _tx_rows(spark, heavy_dir: str, out: dict) -> None:
@@ -273,7 +262,7 @@ def quartet(spark, heavy_dir: str) -> dict:
                 out[name][variant] = round(
                     dt if cur is None else min(cur, dt), 3
                 )
-                _release(spark)
+                release_cached(spark)
         print(f"{name}: {out[name]}")
     return out
 

@@ -1,13 +1,14 @@
-"""Run bench.py once and write the REASSEMBLED full record (contract
-line + sentinel line + any queries_file pointer merged back into one
-JSON object) to a file -- the shape ADJUDICATION/envelope tooling and
-the committed ``BENCH_local_r{N}.json`` artifacts expect.
+"""Run bench.py once and write its FULL record (the contract line,
+with any ``queries_file`` pointer resolved back into the complete
+``queries`` dict) to a JSON file -- the shape of the committed
+``BENCH_local_r{N}.json`` artifacts.
 
-Since r12, bench.py's stdout is two lines (driver-contract budget
-fix; see bench.LINE_BUDGET), so a bare ``python bench.py > out.json``
-no longer produces a single JSON document.  Use::
+bench.py prints one JSON line, but past ``bench.LINE_BUDGET`` that
+line carries only the slowest rows plus a pointer to
+``BENCH_QUERIES.json``, so a bare ``python bench.py > out.json`` can
+hold a partial record.  Use::
 
-    python tools/run_bench.py BENCH_local_r12.json
+    python tools/run_bench.py BENCH_local_r14.json
 """
 
 from __future__ import annotations
