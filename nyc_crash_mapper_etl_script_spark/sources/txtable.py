@@ -855,15 +855,18 @@ class TxTable:
 
         SCALE FORM (Delta's multi-part checkpoint analog): past
         ``_CKPT_INLINE_MAX`` bulk rows (live files + stats + dvs +
-        txns) the bulk sections shard into ``ckpt_vNNNNNN.pNNNN.jsonl``
-        JSON-LINES part files of ``_CKPT_PART_ROWS`` rows each --
-        written and read incrementally, so a million-file state never
-        serializes as one driver-side JSON blob -- and the manifest
-        (the ordinary ``.ckpt_vNNNNNN.json`` name, carrying the scalar
-        state plus ``format/parts``) publishes LAST via the same CAS,
-        so readers only ever see complete checkpoints.  Part files are
-        plain JSON-lines (``{"s": section, "k": key, "v": value}``)
-        readable by ``spark.read.json`` directly.  A checkpoint at a
+        txns) the bulk sections shard into ``ckpt_vNNNNNN.pNNNN.<ext>``
+        part files of ``_CKPT_PART_ROWS`` rows each -- written and read
+        incrementally, so a million-file state never serializes as one
+        driver-side JSON blob -- and the manifest (the ordinary
+        ``.ckpt_vNNNNNN.json`` name, carrying the scalar state plus
+        ``format/part_format/parts``) publishes LAST via the same CAS,
+        so readers only ever see complete checkpoints.  Each part is
+        one ``(s, k, v)`` row per bulk item (section, key, value) in
+        this writer's ``_ckpt_part_format``: ``.parquet`` (``v`` as a
+        JSON string; the ``auto`` default whenever pyarrow imports)
+        readable by ``spark.read.parquet``, or ``.jsonl`` JSON-lines
+        readable by ``spark.read.json``.  A checkpoint at a
         version is a pure function of the log, so racing writers'
         parts are byte-identical and FileExistsError means done."""
         if not self.checkpoint_every or version % self.checkpoint_every:
@@ -2117,9 +2120,6 @@ class TxTable:
                     "(vacuumed history?)"
                 )
         schema = self.logged_schema(version)
-        self._staged_schema = schema.json() if schema is not None else None
-        if self._staged_schema is None:
-            self.__dict__.pop("_staged_schema", None)
         # the COLUMN MAP (and its drop tombstones) roll back with the
         # schema: restoring below a rename must not leave a stale
         # logical->physical entry behind -- a later evolve-add of that
@@ -2127,13 +2127,13 @@ class TxTable:
         # PHYSICAL name another column still owns (silent cross-column
         # corruption, pinned by test).  _commit logs an explicit empty
         # map when this rollback empties a live one.
-        self._staged_column_map = self._column_map(version)
-        st_target = self._state(version)
-        dropped_then = st_target.get("dropped_physical")
+        column_map = self._column_map(version)
+        dropped_then = self._state(version).get("dropped_physical")
+        dropped = None
         if dropped_then is not None or self._state().get(
             "dropped_physical"
         ) is not None:
-            self._staged_dropped_physical = sorted(dropped_then or [])
+            dropped = sorted(dropped_then or [])
         # restore the LAYOUT along with the data: the files being
         # re-staged carry the hive components of the spec as of the
         # target version, so the restore commit must both validate
@@ -2156,16 +2156,14 @@ class TxTable:
                 dv_add=dv_readd,
                 dv_remove=dv_drop,
                 read_scope="whole_table",
+                schema=schema.json() if schema is not None else None,
+                column_map=column_map,
+                dropped_physical=dropped,
             )
         except Exception:
             if not self._head_is_ours("restore", mapping):
                 self._partition_by, self._partition_reconciled = prior
             raise
-        finally:
-            # _commit consumes these on success; a failure in between
-            # must not leak the as-of map into the next commit
-            self.__dict__.pop("_staged_column_map", None)
-            self.__dict__.pop("_staged_dropped_physical", None)
 
     def _head_is_ours(self, op: str, mapping: dict[str, str]) -> bool:
         """After a _commit raised: did OUR entry nonetheless publish
@@ -2321,40 +2319,41 @@ class TxTable:
         except FileNotFoundError:
             return {}
 
-    def _to_physical(self, df: DataFrame) -> DataFrame:
+    def _to_physical(self, df: DataFrame, column_map) -> DataFrame:
         """Project a LOGICAL frame to PHYSICAL column names for
-        staging.  All writes pass through here, so every file on disk
-        uniformly uses physical names and one table-wide map suffices
-        (no per-file metadata).  Identity when no mapping exists --
-        zero overhead for unmapped tables."""
-        cmap = getattr(self, "_staged_column_map", None)
-        if cmap is None:
-            cmap = self._column_map()
+        staging through ``column_map`` (default: the head map).  All
+        writes pass through here, so every file on disk uniformly uses
+        physical names and one table-wide map suffices (no per-file
+        metadata).  Identity when no mapping exists -- zero overhead
+        for unmapped tables."""
+        cmap = self._column_map() if column_map is _UNSET else column_map
         if not cmap:
             return df
         return df.select(
             *[F_col(c).alias(cmap.get(c, c)) for c in df.columns]
         )
 
-    def _stage(self, df: DataFrame) -> tuple[str, dict[str, str]]:
-        """Write df into _staging/<txn>/ and return (txn, mapping of
-        final-relative-path -> staged-relative-path).  The staged
-        files carry PHYSICAL column names (see :meth:`_to_physical`);
-        the logged schema stays LOGICAL."""
+    def _stage(
+        self, df: DataFrame, column_map=_UNSET
+    ) -> tuple[dict[str, str], str]:
+        """Write df into _staging/<txn>/ and return (mapping of
+        final-relative-path -> staged-relative-path, df's schema json
+        for the commit to log).  The staged files carry PHYSICAL
+        column names (see :meth:`_to_physical`); the logged schema
+        stays LOGICAL."""
         txn = uuid.uuid4().hex
         staging = os.path.join(self.root, _STAGING_DIR, txn)
         spec = self.cluster_spec()
         if spec is not None:
             self._stage_clustered(df, staging, spec)
         else:
-            phys = self._to_physical(df)
+            phys = self._to_physical(df, column_map)
             writer = phys.write.mode("overwrite")
             if self.partition_by:
                 # partition columns are never mapped (rename refuses
                 # them), so the hive components keep logical names
                 writer = writer.partitionBy(*self.partition_by)
             writer.parquet(staging)
-        self._staged_schema = df.schema.json()
         mapping: dict[str, str] = {}
         for dirpath, _, filenames in os.walk(staging):
             for name in filenames:
@@ -2376,7 +2375,7 @@ class TxTable:
                     else os.path.join(part_rel, final_name)
                 )
                 mapping[final_rel] = staged_rel
-        return txn, mapping
+        return mapping, df.schema.json()
 
     def _stage_clustered(
         self, df: DataFrame, staging: str, spec: tuple[list[str], list[str], int]
@@ -2758,7 +2757,15 @@ class TxTable:
         dv_rows: "int | None" = None,
         dv_remove: "list[str] | None" = None,
         read_scope: str = "files",
+        schema: "str | None" = None,
+        column_map=_UNSET,
+        dropped_physical: "list[str] | None" = None,
     ) -> int:
+        """Publish one entry and finalize it.  Metadata arrives as
+        arguments, never as handle state: ``schema`` (None logs none --
+        a dv delete stages no data), ``column_map`` the files were
+        staged through (default: the head map) and the
+        ``dropped_physical`` tombstones (None logs none)."""
         entry = {
             "op": op,
             "add": sorted(mapping),
@@ -2781,12 +2788,8 @@ class TxTable:
         requires = set()
         if dv_add or staged_dv or dv_remove:
             requires.add("deletion-vectors")
-        cmap_explicit = "_staged_column_map" in self.__dict__
-        cmap_entry = getattr(self, "_staged_column_map", None)
-        if cmap_entry is None:
-            cmap_entry = self._column_map()
-        else:
-            self.__dict__.pop("_staged_column_map", None)
+        cmap_explicit = column_map is not _UNSET
+        cmap_entry = column_map if cmap_explicit else self._column_map()
         if cmap_explicit and not cmap_entry and self._column_map():
             # a rename back to the physical name emptied the map:
             # the commit must log the EXPLICIT empty map or the fold
@@ -2800,16 +2803,13 @@ class TxTable:
             # physical names would NULL every renamed column)
             entry["column_map"] = dict(sorted(cmap_entry.items()))
             requires.add("column-mapping")
-        dropped = getattr(self, "_staged_dropped_physical", None)
-        if dropped is not None:
-            entry["dropped_physical"] = sorted(dropped)
-            self.__dict__.pop("_staged_dropped_physical", None)
+        if dropped_physical is not None:
+            entry["dropped_physical"] = sorted(dropped_physical)
         if app_txn is not None:
             entry["txn"] = {"app_id": app_txn[0], "version": int(app_txn[1])}
         stats = self._file_stats(mapping)
         if stats:
             entry["stats"] = stats
-        schema = getattr(self, "_staged_schema", None)
         if schema is not None:
             entry["schema"] = schema
         spec = self.cluster_spec()
@@ -2969,17 +2969,22 @@ class TxTable:
         s = self._state(version).get("schema")
         return StructType.fromJson(_json.loads(s)) if s is not None else None
 
-    def _evolve(self, df: DataFrame) -> DataFrame:
+    def _evolve(
+        self, df: DataFrame, version: "int | None" = None
+    ) -> "tuple[DataFrame, object]":
         """ADD-COLUMN schema evolution (Delta mergeSchema's safe
         subset): align ``df`` to stored-columns-then-new-columns
-        order, NULL-filling stored columns the batch lacks.  Type
-        CHANGES are rejected loudly -- silent cross-version casts are
-        how a table format corrupts data."""
+        order, NULL-filling stored columns the batch lacks, and return
+        it with the column map to stage and commit through (``_UNSET``
+        -- the head map -- unless a new column needs a fresh physical
+        name).  ``version`` pins the schema and map to a rewrite's
+        snapshot.  Type CHANGES are rejected loudly -- silent
+        cross-version casts are how a table format corrupts data."""
         from pyspark.sql import functions as F
 
-        stored = self.logged_schema()
+        stored = self.logged_schema(version)
         if stored is None:
-            return df
+            return df, _UNSET
         by_name = {f.name: f for f in df.schema.fields}
         cols = []
         for f in stored.fields:
@@ -2994,6 +2999,7 @@ class TxTable:
             else:
                 cols.append(F.col(f.name))
         cols += [F.col(n) for n in by_name]  # new columns appended
+        column_map = _UNSET
         if by_name:
             # a NEW logical name must not collide with a PHYSICAL name
             # already present in existing files -- either one occupied
@@ -3002,18 +3008,15 @@ class TxTable:
             # resurrect the old bytes into the new column; a fresh
             # physical name makes old files read NULL for it, which is
             # what "new column" means.
-            st = self._state()
+            st = self._state(version)
             cmap = dict(st.get("column_map") or {})
             taken = set(st.get("dropped_physical") or [])
             taken |= {cmap.get(f.name, f.name) for f in stored.fields}
-            changed = False
             for n in by_name:
                 if n in taken:
                     cmap[n] = f"{n}__{uuid.uuid4().hex[:8]}"
-                    changed = True
-            if changed:
-                self._staged_column_map = cmap
-        return df.select(*cols)
+                    column_map = cmap
+        return df.select(*cols), column_map
 
     def last_txn_version(self, app_id: str) -> "int | None":
         """Latest application transaction version committed under
@@ -3028,8 +3031,10 @@ class TxTable:
     ) -> int:
         """Create the table from df (version 1)."""
         self._check_constraints(df)
-        _, mapping = self._stage(df)
-        return self._commit(mapping, [], "init", app_txn=app_txn)
+        mapping, schema = self._stage(df)
+        return self._commit(
+            mapping, [], "init", app_txn=app_txn, schema=schema
+        )
 
     def append(
         self,
@@ -3061,17 +3066,9 @@ class TxTable:
         (typically :class:`MetadataChangedError`) instead of silently
         bumping past it -- retry from a fresh handle."""
         self._recover()
-        try:
-            return self._append_inner(df, evolve_schema, app_txn)
-        finally:
-            # an evolve-staged column map is consumed by _commit; a
-            # failure in between must not leak it into the handle's
-            # next unrelated commit
-            self.__dict__.pop("_staged_column_map", None)
-
-    def _append_inner(self, df, evolve_schema, app_txn):
+        column_map = _UNSET
         if evolve_schema:
-            df = self._evolve(df)
+            df, column_map = self._evolve(df)
         else:
             logged = self.logged_schema()
             if logged is not None:
@@ -3096,8 +3093,11 @@ class TxTable:
                 if [f.name for f in df.schema.fields] != order:
                     df = df.select(*[F_col(c) for c in order])
         self._check_constraints(df)
-        _, mapping = self._stage(df)
-        return self._commit(mapping, [], "append", app_txn=app_txn)
+        mapping, schema = self._stage(df, column_map)
+        return self._commit(
+            mapping, [], "append", app_txn=app_txn, schema=schema,
+            column_map=column_map,
+        )
 
     def _partition_rel(self, row) -> str:
         # NULL partition values use Spark's hive-compatible sentinel
@@ -3107,6 +3107,89 @@ class TxTable:
                 for c in self.partition_by
             ]
         )
+
+    def _rewrite(
+        self,
+        op: str,
+        plan,
+        read_scope: str = "files",
+        app_txn: "tuple[str, int] | None" = None,
+        undo=None,
+    ) -> "int | None":
+        """THE read-modify-write transaction: recover, ONE snapshot,
+        ``plan(base_version)`` -> ``(removes, frame, column_map)`` or
+        None (nothing to do: no commit, returns None), pin ``frame``
+        with one eager localCheckpoint (it reads the very files
+        finalize retires), stage, commit against the snapshot.  Every
+        read ``plan`` makes -- schema and column map included -- pins
+        to that version or runs after it: a pair torn across two
+        versions could rebase past a concurrent append and publish,
+        and metadata read BEFORE the snapshot would let a concurrent
+        drop/rename land unchecked below it.  A staging
+        failure a concurrent commit caused surfaces as
+        ConcurrentWriteError.  ``undo`` reverts handle state ``plan``
+        changed unless OUR entry published (a post-publish finalize
+        failure is _recover()-able and the log then states the new
+        value)."""
+        self._recover()
+        base_version = self._snapshot_version()
+        try:
+            planned = plan(base_version)
+            if planned is None:
+                return None
+            removes, frame, column_map = planned
+            mapping, schema = self._stage(frame.localCheckpoint(), column_map)
+        except Exception as e:  # noqa: BLE001 -- translated or re-raised
+            if undo is not None:
+                undo()
+            self._raise_if_concurrent(e, base_version)
+        try:
+            return self._commit(
+                mapping, removes, op, base_version=base_version,
+                app_txn=app_txn, read_scope=read_scope, schema=schema,
+                column_map=column_map,
+            )
+        except Exception:
+            if undo is not None and not self._head_is_ours(op, mapping):
+                undo()
+            raise
+
+    def _scope(
+        self,
+        spark: SparkSession,
+        version: int,
+        touched,
+        keep,
+        source: "DataFrame | None" = None,
+        column_map=_UNSET,
+    ) -> "tuple | None":
+        """The :meth:`_rewrite` plan of a partition-scoped op at
+        snapshot ``version``: ``(removes, keep(base), column_map)``
+        where ``removes``/``base`` are the whole live set when
+        unpartitioned, else the partitions holding the
+        ``touched(current)`` rows plus, for merge, ``source``'s own
+        (no files there: an empty base).  None when nothing is touched
+        -- otherwise _scoped_removes would fold in every mixed-layout
+        flat file and a no-op would pay a migration rewrite and a
+        commit (migration belongs to repartition_layout)."""
+        current = self.read(spark, version=version)
+        if not self.partition_by:
+            removes, base = list(self._live_files(version=version)), current
+        else:
+            rels = {
+                self._partition_rel(r)
+                for frame in (source, touched(current)) if frame is not None
+                for r in frame.select(*self.partition_by).distinct().collect()
+            }
+            if not rels:
+                return None
+            removes = self._scoped_removes(rels, version=version)
+            base = (
+                self._read_files(spark, removes, version=version)
+                if removes
+                else current.where("1=0")
+            )
+        return removes, keep(base), column_map
 
     def overwrite(
         self, df: DataFrame, app_txn: "tuple[str, int] | None" = None
@@ -3122,12 +3205,9 @@ class TxTable:
         ``app_txn=(app_id, version)`` records an application
         transaction in the commit entry for idempotent sinks (see
         :meth:`last_txn_version`)."""
-        self._recover()
         self._check_constraints(df)
-        base_version = self._snapshot_version()
-        try:
-            removes = list(self._live_files(version=base_version))
-            pinned = df.localCheckpoint()
+
+        def plan(v):
             # a whole-set replace may change the schema in any
             # direction (test_txtable_schema_enforce), so the COLUMN
             # MAP must be reconciled with the replacing schema exactly
@@ -3139,29 +3219,14 @@ class TxTable:
             # could bind a physical name another live column owns --
             # the silent cross-column corruption class.  _commit logs
             # an explicit empty map when the prune empties a live one.
-            cmap = self._column_map()
-            if cmap:
-                keep = set(df.columns)
-                self._staged_column_map = {
-                    k: v for k, v in cmap.items() if k in keep
-                }
-            _, mapping = self._stage(pinned)
-        except Exception as e:  # noqa: BLE001 -- translated or re-raised
-            self.__dict__.pop("_staged_column_map", None)
-            self._raise_if_concurrent(e, base_version)
-        try:
-            return self._commit(
-                mapping,
-                removes,
-                "overwrite",
-                base_version=base_version,
-                app_txn=app_txn,
-                read_scope="whole_table",
+            cmap, keep = self._column_map(v), set(df.columns)
+            return list(self._live_files(version=v)), df, (
+                {k: p for k, p in cmap.items() if k in keep} if cmap else _UNSET
             )
-        finally:
-            # _commit consumes the staged map on success; a failure in
-            # between must not leak it into the handle's next commit
-            self.__dict__.pop("_staged_column_map", None)
+
+        return self._rewrite(
+            "overwrite", plan, read_scope="whole_table", app_txn=app_txn
+        )
 
     def merge(self, source: DataFrame, key: str, evolve_schema: bool = False) -> int:
         """Delta-style MERGE: matched rows are replaced by the source
@@ -3169,32 +3234,35 @@ class TxTable:
         present in the source are rewritten; every other partition's
         files carry over untouched.  ``evolve_schema=True`` allows
         add-column evolution exactly as in :meth:`append`."""
-        self._recover()
-        base_version = self._snapshot_version()
         spark = source.sparkSession
-        try:
-            if evolve_schema:
-                source = self._evolve(source)
-            self._check_constraints(source)
-            try:
-                staged = self._merge_staged(
-                    source, key, spark, allow_missing=evolve_schema,
-                    as_of=base_version,
-                )
-            except Exception as e:  # noqa: BLE001 -- translated or re-raised
-                self._raise_if_concurrent(e, base_version)
-            if staged is None:  # empty source: nothing touched, no commit
-                return self._snapshot_version()
-            mapping, removes = staged
-            return self._commit(
-                mapping, removes, "merge", base_version=base_version,
-                read_scope="full",
+
+        def plan(v):
+            # evolve after the snapshot (see _rewrite)
+            src, column_map = (
+                self._evolve(source, v) if evolve_schema else (source, _UNSET)
             )
-        finally:
-            # an evolve-staged column map is consumed by _commit; a
-            # failure in between must not leak it into the handle's
-            # next unrelated commit
-            self.__dict__.pop("_staged_column_map", None)
+            self._check_constraints(src)
+            src_keys = src.select(key).where(src[key].isNotNull()).distinct()
+            # Touched = source partitions UNION partitions currently
+            # holding a matched key.  The second set is what Delta's
+            # find-touched-files join computes; without it a source
+            # row whose partition value CHANGED would insert into the
+            # new partition while the stale row survives in the old
+            # one (caught by the hypothesis model test).  Cost is one
+            # semi-join keyed scan -- O(matches), not O(table
+            # rewrite) -- and the rewrite stays partition-scoped.
+            return self._scope(
+                spark, v,
+                lambda cur: cur.join(src_keys, on=key, how="left_semi"),
+                lambda base: base.join(
+                    src_keys, on=key, how="left_anti"
+                ).unionByName(src, allowMissingColumns=evolve_schema),
+                source=src, column_map=column_map,
+            )
+
+        return self._rewrite(
+            "merge", plan, read_scope="full"
+        ) or self._snapshot_version()
 
     def _read_files(
         self,
@@ -3253,70 +3321,6 @@ class TxTable:
             if f.startswith(prefixes) or not pb <= _path_partition_cols(f)
         ]
 
-    def _merge_staged(
-        self,
-        source,
-        key,
-        spark,
-        allow_missing: bool = False,
-        as_of: "int | None" = None,
-    ):
-        # ONE snapshot feeds the probe read, the removal set, and the
-        # rewrite base: without the pin, a concurrent append landing
-        # between these calls tears them across two versions, and the
-        # conflict checker -- which correctly lets blind appends
-        # rebase -- would publish the inconsistent pair
-        current = self.read(spark, version=as_of)
-        src_keys = source.select(key).where(source[key].isNotNull()).distinct()
-        if self.partition_by:
-            # Touched = source partitions UNION partitions currently
-            # holding a matched key.  The second set is what Delta's
-            # find-touched-files join computes; without it a source
-            # row whose partition value CHANGED would insert into the
-            # new partition while the stale row survives in the old
-            # one (caught by the hypothesis model test).  Cost is one
-            # semi-join keyed scan -- O(matches), not O(table
-            # rewrite) -- and the rewrite stays partition-scoped.
-            touched = {
-                self._partition_rel(r)
-                for r in source.select(*self.partition_by).distinct().collect()
-            }
-            touched |= {
-                self._partition_rel(r)
-                for r in current.join(src_keys, on=key, how="left_semi")
-                .select(*self.partition_by)
-                .distinct()
-                .collect()
-            }
-            if not touched:
-                # empty source => empty touched set (source partition
-                # values and matched keys are both derived from it).
-                # Without this guard _scoped_removes would still fold
-                # in every mixed-layout flat file, so a no-op merge on
-                # a pre-upgrade table performed a full O(flat-files)
-                # migration rewrite and a new commit.  Migration
-                # belongs to repartition_layout or to rewrites that
-                # actually touch rows -- a no-op merge is a no-op.
-                return None
-            removes = self._scoped_removes(touched, version=as_of)
-            base_files = [os.path.join(self.root, f) for f in removes]
-            base = (
-                self._read_files(spark, base_files, version=as_of)
-                if base_files
-                else current.where("1=0")
-            )
-        else:
-            removes = list(self._live_files(version=as_of))
-            base = current
-        merged = base.join(src_keys, on=key, how="left_anti").unionByName(
-            source, allowMissingColumns=allow_missing
-        )
-        # pin the merged rows before any file mutation: the plan reads
-        # the very files the finalize step will delete
-        merged = merged.localCheckpoint()
-        _, mapping = self._stage(merged)
-        return mapping, removes
-
     def merge_update(
         self,
         source: DataFrame,
@@ -3336,33 +3340,10 @@ class TxTable:
         partitions holding matched keys rewrite."""
         from pyspark.sql import functions as FF
 
-        self._recover()
-        base_version = self._snapshot_version()
         spark = source.sparkSession
-        try:
-            current = self.read(spark, version=base_version)
-            src_keys = source.select(key).where(
-                source[key].isNotNull()
-            ).distinct()
-            if self.partition_by:
-                touched = {
-                    self._partition_rel(r)
-                    for r in current.join(src_keys, on=key, how="left_semi")
-                    .select(*self.partition_by)
-                    .distinct()
-                    .collect()
-                }
-                if not touched:
-                    return self._snapshot_version()
-                removes = self._scoped_removes(touched, version=base_version)
-                base = self._read_files(
-                    spark,
-                    [os.path.join(self.root, f) for f in removes],
-                    version=base_version,
-                )
-            else:
-                removes = list(self._live_files(version=base_version))
-                base = current
+        src_keys = source.select(key).where(source[key].isNotNull()).distinct()
+
+        def update(base):
             src = source.select(
                 FF.col(key).alias("__src_key"),
                 *[
@@ -3392,14 +3373,17 @@ class TxTable:
             # abort the commit, and a constraint spanning a set_col
             # and an untouched column sees the full post-update row.
             self._check_constraints(joined.where(gate).select(*proj))
-            updated = joined.select(*proj).localCheckpoint()
-            _, mapping = self._stage(updated)
-        except Exception as e:  # noqa: BLE001 -- translated or re-raised
-            self._raise_if_concurrent(e, base_version)
-        return self._commit(
-            mapping, removes, "merge_update", base_version=base_version,
+            return joined.select(*proj)
+
+        return self._rewrite(
+            "merge_update",
+            lambda v: self._scope(
+                spark, v,
+                lambda cur: cur.join(src_keys, on=key, how="left_semi"),
+                update,
+            ),
             read_scope="full",
-        )
+        ) or self._snapshot_version()
 
     def _column_change_guard(self, name: str) -> "tuple":
         """Shared validation for rename/drop: the logged schema (must
@@ -3475,15 +3459,10 @@ class TxTable:
         phys = self._column_map().get(old, old)
         if phys != new:  # renaming back to the physical name IS identity
             cmap[new] = phys
-        self._staged_column_map = cmap
-        self._staged_schema = StructType(new_fields).json()
-        try:
-            return self._commit(
-                {}, [], "rename_column", base_version=base_version
-            )
-        finally:
-            self.__dict__.pop("_staged_column_map", None)
-            self.__dict__.pop("_staged_schema", None)
+        return self._commit(
+            {}, [], "rename_column", base_version=base_version,
+            schema=StructType(new_fields).json(), column_map=cmap,
+        )
 
     def drop_column(self, name: str) -> int:
         """DROP COLUMN without rewriting data (Delta column mapping):
@@ -3501,22 +3480,16 @@ class TxTable:
         if len(schema.fields) == 1:
             raise ValueError(f"cannot drop the only column {name!r}")
         phys = cmap.pop(name, name)
-        st = self._state()
-        self._staged_dropped_physical = sorted(
-            set(st.get("dropped_physical") or []) | {phys}
+        return self._commit(
+            {}, [], "drop_column", base_version=base_version,
+            schema=StructType(
+                [f for f in schema.fields if f.name != name]
+            ).json(),
+            column_map=cmap,
+            dropped_physical=sorted(
+                set(self._state().get("dropped_physical") or []) | {phys}
+            ),
         )
-        self._staged_column_map = cmap
-        self._staged_schema = StructType(
-            [f for f in schema.fields if f.name != name]
-        ).json()
-        try:
-            return self._commit(
-                {}, [], "drop_column", base_version=base_version
-            )
-        finally:
-            self.__dict__.pop("_staged_column_map", None)
-            self.__dict__.pop("_staged_schema", None)
-            self.__dict__.pop("_staged_dropped_physical", None)
 
     def compact(
         self,
@@ -3540,11 +3513,10 @@ class TxTable:
         layout Delta/Iceberg build for multi-dimension data skipping).
         Rows and schema are unchanged -- the scratch z column is
         dropped before staging."""
-        self._recover()
-        base_version = self._snapshot_version()
-        try:
-            removes = list(self._live_files(version=base_version))
-            current = self.read(spark, version=base_version)
+
+        def plan(v):
+            removes = list(self._live_files(version=v))
+            current = self.read(spark, version=v)
             if self.cluster_spec() is not None:
                 # clustered tables have ONE layout: the staged write
                 # re-buckets/re-sorts, restoring one file per bucket
@@ -3554,35 +3526,28 @@ class TxTable:
                     raise ValueError(
                         "zorder_by conflicts with the table's cluster_by spec"
                     )
-                compacted = current.localCheckpoint()
-                _, mapping = self._stage(compacted)
-                return self._commit(
-                    mapping, removes, "compact", base_version=base_version
-                )
-            if n_files is None:
+                return removes, current, _UNSET
+            n = n_files
+            if n is None:
                 total_bytes = sum(
                     os.path.getsize(os.path.join(self.root, f)) for f in removes
                 )
-                n_files = max(1, round(total_bytes / (target_mb * 1024 * 1024)))
-            if zorder_by is not None:
-                from nyc_crash_mapper_etl_script_spark.operators.zorder import (
-                    zorder_value,
-                )
+                n = max(1, round(total_bytes / (target_mb * 1024 * 1024)))
+            if zorder_by is None:
+                return removes, current.repartition(n), _UNSET
+            from nyc_crash_mapper_etl_script_spark.operators.zorder import (
+                zorder_value,
+            )
 
-                x_col, y_col = zorder_by
-                compacted = (
-                    zorder_value(current, x_col, y_col, zorder_bits)
-                    .repartitionByRange(n_files, "zv")
-                    .sortWithinPartitions("zv")
-                    .drop("zv")
-                    .localCheckpoint()
-                )
-            else:
-                compacted = current.repartition(n_files).localCheckpoint()
-            _, mapping = self._stage(compacted)
-        except Exception as e:  # noqa: BLE001 -- translated or re-raised
-            self._raise_if_concurrent(e, base_version)
-        return self._commit(mapping, removes, "compact", base_version=base_version)
+            x_col, y_col = zorder_by
+            return removes, (
+                zorder_value(current, x_col, y_col, zorder_bits)
+                .repartitionByRange(n, "zv")
+                .sortWithinPartitions("zv")
+                .drop("zv")
+            ), _UNSET
+
+        return self._rewrite("compact", plan)
 
     def commits_since_rewrite(self) -> int:
         """Commits since the last whole-table rewrite (init / compact /
@@ -3630,41 +3595,30 @@ class TxTable:
                 "compact_small cannot preserve a cluster_by bucket "
                 "layout; use compact() (it re-buckets and re-sorts)"
             )
-        self._recover()
-        base_version = self._snapshot_version()
-        try:
+
+        def plan(v):
             sizes = {
                 f: os.path.getsize(os.path.join(self.root, f))
-                for f in self._live_files(version=base_version)
+                for f in self._live_files(version=v)
             }
             small = [
                 f for f, s in sizes.items() if s < small_mb * 1024 * 1024
             ]
             if len(small) < 2:
                 return None
-            base = self._read_files(
-                spark,
-                [os.path.join(self.root, f) for f in small],
-                version=base_version,
-            )
+            base = self._read_files(spark, small, version=v)
             if self.partition_by:
                 # ~one merged file per touched partition value: the
                 # staged partitionBy write splits by value, so one
                 # hash task per value is the minimal-file layout
-                merged = base.repartition(
+                return sorted(small), base.repartition(
                     *[F_col(c) for c in self.partition_by]
-                )
-            else:
-                total = sum(sizes[f] for f in small)
-                n_files = max(1, round(total / (target_mb * 1024 * 1024)))
-                merged = base.repartition(n_files)
-            merged = merged.localCheckpoint()
-            _, mapping = self._stage(merged)
-        except Exception as e:  # noqa: BLE001 -- translated or re-raised
-            self._raise_if_concurrent(e, base_version)
-        return self._commit(
-            mapping, sorted(small), "compact_small", base_version=base_version
-        )
+                ), _UNSET
+            total = sum(sizes[f] for f in small)
+            n_files = max(1, round(total / (target_mb * 1024 * 1024)))
+            return sorted(small), base.repartition(n_files), _UNSET
+
+        return self._rewrite("compact_small", plan)
 
     def compact_if_due(
         self,
@@ -3721,44 +3675,33 @@ class TxTable:
                 "cluster_by and partition_by are mutually exclusive: "
                 f"{self.root} has a cluster spec {self.cluster_spec()}"
             )
-        self._recover()
-        base_version = self._snapshot_version()
         prior = (self._partition_by, self._partition_reconciled)
-        try:
-            removes = list(self._live_files(version=base_version))
-            pinned = self.read(spark, version=base_version).localCheckpoint()
+
+        def plan(v):
+            removes = list(self._live_files(version=v))
+            current = self.read(spark, version=v)
             # bypass the setter: contradicting the logged spec is the
-            # point here, and the commit below re-logs the new one as
-            # the newest (inherited-by-all) entry.  A FLATTEN must log
-            # the explicit empty spec (same rule as restore-to-
+            # point here, and the commit re-logs the new one as the
+            # newest (inherited-by-all) entry.  A FLATTEN must log the
+            # explicit empty spec (same rule as restore-to-
             # pre-layout), so mark a spec as ever-logged whenever one
             # was -- _commit writes [] only under that flag.
             if self._logged_partition_by() is not None:
                 self._partition_spec_logged = True
             self._partition_by = partition_by
             self._partition_reconciled = True
-            _, mapping = self._stage(pinned)
-        except Exception as e:  # noqa: BLE001 -- translated or re-raised
+            return removes, current, _UNSET
+
+        def undo():
+            # a failed rewrite must not leave this handle believing the
+            # NEW spec while the log still says the old one -- a caller
+            # that catches and falls back to append() would persist
+            # the contradictory layout without the audited rewrite
             self._partition_by, self._partition_reconciled = prior
-            self._raise_if_concurrent(e, base_version)
-        try:
-            return self._commit(
-                mapping, removes, "repartition",
-                base_version=base_version, read_scope="whole_table",
-            )
-        except Exception:
-            # a lost commit race must not leave this handle believing
-            # the NEW spec while the log still says the old one -- a
-            # caller that catches and falls back to append() would
-            # persist the contradictory layout without the audited
-            # rewrite.  But if OUR entry actually published and only
-            # the post-publish finalize failed (a _recover()-able
-            # state), the log's newest spec IS the new one and rolling
-            # the handle back would recreate the contradiction from
-            # the other side.
-            if not self._head_is_ours("repartition", mapping):
-                self._partition_by, self._partition_reconciled = prior
-            raise
+
+        return self._rewrite(
+            "repartition", plan, read_scope="whole_table", undo=undo
+        )
 
     def _dv_delete(self, spark: SparkSession, select_doomed) -> int:
         """The DELETION-VECTOR write path shared by
@@ -3790,8 +3733,10 @@ class TxTable:
                 "tables: read_clustered scans the raw files and would "
                 "resurrect deleted rows; use the rewrite delete"
             )
+        # ONE snapshot: positions must come from exactly the state
+        # _rebase validates against, never from a newer head
         base_version = self._snapshot_version()
-        schema = self.logged_schema()
+        schema = self.logged_schema(base_version)
         if schema is not None and (
             {_TXDV_FILE, _TXDV_POS} & {f.name for f in schema.fields}
         ):
@@ -3799,7 +3744,7 @@ class TxTable:
                 f"table schema uses reserved column name(s) "
                 f"{_TXDV_FILE!r}/{_TXDV_POS!r}"
             )
-        st = self._state()
+        st = self._state(base_version)
         files = list(st["live"])
         if not files:
             return base_version
@@ -3808,7 +3753,8 @@ class TxTable:
         staging = os.path.join(self.root, _STAGING_DIR, txn)
         try:
             current = self._read_resolved(
-                spark, files, schema, dvs=dvs, keep_pos=True
+                spark, files, schema, dvs=dvs, keep_pos=True,
+                cmap=self._column_map(base_version),
             )
             # pin the doomed positions before anything else runs: the
             # distinct-file collect and the staged write must see one
@@ -3878,84 +3824,37 @@ class TxTable:
         the sparse-delete path at scale (see :meth:`_dv_delete`)."""
         if dv:
             return self._dv_delete(spark, lambda cur: cur.where(condition))
-        self._recover()
-        base_version = self._snapshot_version()
-        try:
-            current = self.read(spark, version=base_version)
-            if self.partition_by:
-                touched = [
-                    self._partition_rel(r)
-                    for r in current.where(condition)
-                    .select(*self.partition_by)
-                    .distinct()
-                    .collect()
-                ]
-                if not touched:
-                    return self._snapshot_version()
-                removes = self._scoped_removes(touched, version=base_version)
-                base = self._read_files(
-                    spark,
-                    [os.path.join(self.root, f) for f in removes],
-                    version=base_version,
-                )
-            else:
-                removes = list(self._live_files(version=base_version))
-                base = current
-            # SQL DELETE semantics: a NULL condition KEEPS the row
-            # (only provably-TRUE rows die), so negate through a
-            # coalesce -- a bare ~condition would delete NULLs too
-            from pyspark.sql import functions as FF
+        from pyspark.sql import functions as FF
 
-            kept = base.where(
-                ~FF.coalesce(condition, FF.lit(False))
-            ).localCheckpoint()
-            _, mapping = self._stage(kept)
-        except Exception as e:  # noqa: BLE001 -- translated or re-raised
-            self._raise_if_concurrent(e, base_version)
-        return self._commit(
-            mapping, removes, "delete_where", base_version=base_version,
+        return self._rewrite(
+            "delete_where",
+            lambda v: self._scope(
+                spark, v, lambda cur: cur.where(condition),
+                # SQL DELETE semantics: a NULL condition KEEPS the row
+                # (only provably-TRUE rows die), so negate through a
+                # coalesce -- a bare ~condition would delete NULLs too
+                lambda base: base.where(~FF.coalesce(condition, FF.lit(False))),
+            ),
             read_scope="full",
-        )
+        ) or self._snapshot_version()
 
     def delete(self, keys: DataFrame, key: str, dv: bool = False) -> int:
         """DELETE-by-key (S10): rewrite only the partitions holding
         doomed rows.  ``dv=True`` records a deletion vector instead of
         rewriting (one left-semi join to find the doomed positions --
         the by-key form of :meth:`_dv_delete`'s sparse-delete path)."""
-        if dv:
-            ks = keys.select(key).distinct()
-            return self._dv_delete(
-                keys.sparkSession,
-                lambda cur: cur.join(ks, key, "left_semi"),
-            )
-        self._recover()
-        base_version = self._snapshot_version()
         spark = keys.sparkSession
-        try:
-            current = self.read(spark, version=base_version)
-            doomed = current.join(keys.select(key).distinct(), key, "left_semi")
-            if self.partition_by:
-                touched = [
-                    self._partition_rel(r)
-                    for r in doomed.select(*self.partition_by).distinct().collect()
-                ]
-                if not touched:
-                    return self._snapshot_version()
-                removes = self._scoped_removes(touched, version=base_version)
-                base = self._read_files(
-                    spark,
-                    [os.path.join(self.root, f) for f in removes],
-                    version=base_version,
-                )
-            else:
-                removes = list(self._live_files(version=base_version))
-                base = current
-            kept = base.join(keys.select(key).distinct(), key, "left_anti")
-            kept = kept.localCheckpoint()
-            _, mapping = self._stage(kept)
-        except Exception as e:  # noqa: BLE001 -- translated or re-raised
-            self._raise_if_concurrent(e, base_version)
-        return self._commit(
-            mapping, removes, "delete", base_version=base_version,
+        ks = keys.select(key).distinct()
+        if dv:
+            return self._dv_delete(
+                spark, lambda cur: cur.join(ks, key, "left_semi")
+            )
+
+        return self._rewrite(
+            "delete",
+            lambda v: self._scope(
+                spark, v, lambda cur: cur.join(ks, key, "left_semi"),
+                lambda base: base.join(ks, key, "left_anti"),
+            ),
             read_scope="full",
-        )
+        ) or self._snapshot_version()

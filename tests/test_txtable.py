@@ -359,7 +359,7 @@ def test_cross_instance_conflict_surfaces_deterministically(spark, tmp_path):
         .unionByName(spark.createDataFrame([(1, "b")], "k long, v string"))
         .localCheckpoint()
     )
-    _, mapping = t1._stage(merged)
+    mapping, _ = t1._stage(merged)
 
     t2.merge(spark.createDataFrame([(2, "c")], "k long, v string"), "k")
 

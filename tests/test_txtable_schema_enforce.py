@@ -8,6 +8,7 @@ the files, invisible to every consumer)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from nyc_crash_mapper_etl_script_spark.sources.txtable import (
     MetadataChangedError,
@@ -223,3 +224,94 @@ def test_evolve_readd_after_drop_still_passes_the_tombstone_guard(
     )
     got = {r["k"]: r["score"] for r in TxTable(root).read(spark).collect()}
     assert got == {1: None, 2: 7.0}  # old bytes stay dead
+
+
+@pytest.mark.parametrize("how", ["delete_where", "delete"])
+def test_dv_delete_keeps_a_peers_evolved_schema(spark, tmp_path, how):
+    """A dv delete stages no data, so its commit logs no schema.  A
+    handle used to carry its last staged schema as leftover state:
+    after H wrote (k, v) and G evolved the table to (k, v, score), H's
+    dv delete re-logged struct<k,v> and every read silently lost
+    ``score``."""
+    root = str(tmp_path / "t")
+    h = TxTable(root)
+    h.init(_df(spark, [(1, "a"), (2, "b")]))
+    TxTable(root).append(
+        _df(spark, [(3, "c", 9.5)], "k long, v string, score double"),
+        evolve_schema=True,
+    )
+    if how == "delete_where":
+        h.delete_where(spark, F.col("k") == 1, dv=True)
+    else:
+        h.delete(_df(spark, [(1, "x")]), "k", dv=True)
+    fresh = TxTable(root)
+    assert "score" in fresh.logged_schema().fieldNames()
+    got = fresh.read(spark)
+    assert {r["k"]: r["score"] for r in got.collect()} == {2: None, 3: 9.5}
+
+
+@pytest.mark.parametrize("how", ["append", "merge"])
+def test_failed_evolve_write_leaks_no_metadata(spark, tmp_path, how):
+    """Metadata an evolve write computes must not outlive the write.
+    Re-adding a dropped column binds it to a fresh physical name; when
+    that write then fails its CHECK, the handle's next plain append
+    must log the pre-failure state: no column map, the post-drop
+    schema."""
+    root = str(tmp_path / "t")
+    t = TxTable(root, constraints={"positive": "a > 0"})
+    t.init(spark.createDataFrame([(1, "x", 1.0)], "a long, b string, c double"))
+    t.drop_column("c")
+    before = t.logged_schema().simpleString()
+    bad = spark.createDataFrame([(-1, "y", 2.0)], "a long, b string, c double")
+    with pytest.raises(ValueError, match="CHECK constraint violated"):
+        if how == "append":
+            t.append(bad, evolve_schema=True)
+        else:
+            t.merge(bad, "a", evolve_schema=True)
+    t.append(spark.createDataFrame([(2, "z")], "a long, b string"))
+    fresh = TxTable(root)
+    assert fresh._column_map() == {}
+    assert fresh.logged_schema().simpleString() == before
+    assert sorted(r["a"] for r in fresh.read(spark).collect()) == [1, 2]
+
+
+@pytest.mark.parametrize("how", ["drop", "rename"])
+def test_evolve_merge_reads_metadata_after_its_snapshot(
+    spark, tmp_path, monkeypatch, how
+):
+    """An evolve-merge must build its frame from the schema at its own
+    snapshot.  A peer's drop/rename that commits while the merge runs
+    its CHECK job lands after that snapshot and must abort the merge;
+    had the merge evolved before taking the snapshot, the peer's
+    commit would sit below it, unchecked, and the merge would re-log
+    the stale schema -- the dropped ``d`` back in the logged schema,
+    its tombstoned bytes served again from untouched files."""
+    root = str(tmp_path / "t")
+    h = TxTable(root)
+    h.init(spark.createDataFrame([(1, "a", 1.0)], "k long, v string, d double"))
+    check = h._check_constraints
+
+    def racing_check(df):
+        monkeypatch.setattr(h, "_check_constraints", check)
+        peer = TxTable(root)
+        if how == "drop":
+            peer.drop_column("d")
+        else:
+            peer.rename_column("d", "d2")
+        check(df)
+
+    monkeypatch.setattr(h, "_check_constraints", racing_check)
+    try:
+        h.merge(
+            _df(spark, [(2, "b", True)], "k long, v string, e boolean"),
+            "k",
+            evolve_schema=True,
+        )
+    except MetadataChangedError:
+        pass
+    fresh = TxTable(root)
+    assert "d" not in fresh.logged_schema().fieldNames()
+    got = fresh.read(spark)
+    assert "d" not in got.columns
+    if how == "rename":
+        assert [r["d2"] for r in got.where("k = 1").collect()] == [1.0]
