@@ -22,6 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nyc_crash_mapper_etl_script_spark import harness
+from nyc_crash_mapper_etl_script_spark.functions.materialize import released_on_exit
 from nyc_crash_mapper_etl_script_spark.session import get_spark
 
 HEADLINE = [
@@ -215,6 +216,7 @@ def bench_storage(spark, sf_dir: str, reps: int) -> "dict[str, float]":
         read_txtable_stream,
     )
     from nyc_crash_mapper_etl_script_spark.sources.txtable import TxTable
+    from nyc_crash_mapper_etl_script_spark.streaming import drain
     from nyc_crash_mapper_etl_script_spark.streaming.sizing import (
         state_partitions,
         state_partitions_for,
@@ -337,7 +339,7 @@ def bench_storage(spark, sf_dir: str, reps: int) -> "dict[str, float]":
                         .option("checkpointLocation", out + "_ck")
                         .start()
                     )
-                    q.processAllAvailable()
+                    drain(q, 300)
                     q.stop()
                     q.awaitTermination(300)
                 n = len(
@@ -395,19 +397,21 @@ def main() -> None:
         # declaration: driver-side construction / Catalyst analysis is
         # a fixed per-query cost independent of data scale, so the
         # number measures distributed execution, the quantity that
-        # grows with the data.
-        df = build(name)
-        # label the jobs (guide §1.5) so a UI-enabled run maps stages
-        # back to rows; a thread-local setter, microseconds, untimed.
-        # try/finally: a raising run must not leak this row's label
-        # onto later rows' jobs
-        spark.sparkContext.setJobDescription(f"bench: {name}")
-        try:
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-        finally:
-            spark.sparkContext.setJobDescription(None)
+        # grows with the data.  Relations shared DISK_ONLY are
+        # unpersisted when the run ends.
+        with released_on_exit():
+            df = build(name)
+            # label the jobs (guide §1.5) so a UI-enabled run maps stages
+            # back to rows; a thread-local setter, microseconds, untimed.
+            # try/finally: a raising run must not leak this row's label
+            # onto later rows' jobs
+            spark.sparkContext.setJobDescription(f"bench: {name}")
+            try:
+                t0 = time.time()
+                df.write.format("noop").mode("overwrite").save()
+                dt = time.time() - t0
+            finally:
+                spark.sparkContext.setJobDescription(None)
         return dt
 
     # warm pass (untimed): JVM JIT, parquet footers, physical

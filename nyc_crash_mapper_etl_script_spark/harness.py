@@ -4413,6 +4413,7 @@ def dedup_stream_vs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from nyc_crash_mapper_etl_script_spark.sources.txtable import TxTable
+    from nyc_crash_mapper_etl_script_spark.streaming import drain
     from nyc_crash_mapper_etl_script_spark.streaming.dedup import (
         near_dedup_stream,
     )
@@ -4454,7 +4455,7 @@ def dedup_stream_vs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=0.5,
             base_hash="md5",
         )
-        q.processAllAvailable()
+        drain(q, 600)
         q.stop()
         survivors = [r["doc_id"] for r in spark.read.parquet(out).collect()]
     finally:

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_crash_mapper_etl_script_spark.plans.nightly import run_nightly
+from nyc_crash_mapper_etl_script_spark.plans.nightly import enrich_nightly
 from nyc_crash_mapper_etl_script_spark.schemas import CRASHES_SCHEMA, load_table
 
 #: vehicle text seen in the synthetic feed -> canonical code
@@ -174,20 +174,12 @@ def _synth_dims_build(spark: SparkSession):
 
 
 def nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full nightly DAG at harness scale; returns the enriched
-    fact table (act on it to execute the whole graph)."""
+    """The nightly's fact-table path at harness scale; returns the
+    enriched fact table (act on it to execute the graph behind it)."""
     feed = synth_feed(spark, sf_dir)
-    districts, intersections, crosswalk = synth_dims(spark)
+    districts, _, crosswalk = synth_dims(spark)
     ek = ("empty", id(spark._jsparkSession))
     if ek not in _dims_cache:
         _dims_cache[ek] = spark.createDataFrame([], CRASHES_SCHEMA)
     empty = _dims_cache[ek]
-    out = run_nightly(
-        feed,
-        empty,
-        districts,
-        intersections,
-        crosswalk,
-        months_window=None,
-    )
-    return out["crashes"]
+    return enrich_nightly(feed, empty, districts, crosswalk)

@@ -1,12 +1,19 @@
 """The nightly ETL (reference main() at main.py:1132-1200) as ONE
-lazily-composed DataFrame DAG.
+DataFrame DAG.
 
 Reference orchestration: 2 HTTP GETs, ~N/50 INSERT POSTs, 4 polled
 batch jobs, a VACUUM -- hours of throttled API calls.  Here the nine
-stages compose into a single logical plan; Catalyst fuses the
-enrichment projections (vehicle flags + blame are pure column work on
-the same pass), AQE picks join strategies, and one write action
-executes everything.
+stages compose into one DataFrame DAG; Catalyst fuses the enrichment
+projections (vehicle flags + blame are pure column work on the same
+pass) and AQE picks join strategies.  The DAG is cut at the three
+places where it forks (the merged input, the enriched fact table, the
+updated intersection tallies) by shared materializations, and every
+stage runs once per night, not once per output: under AQE a lazy
+``localCheckpoint`` runs its subtree's shuffle stages where it is
+declared, so declaring the night runs most of it, and writing the
+three outputs runs what is left above the cuts.  (Past the size bound
+of ``functions/materialize.py`` the shares persist DISK_ONLY instead,
+and the first write that reads each one computes it.)
 
 Stage map (reference -> here):
   1 ingest+normalize+dedup  get_soda_data/format_soda_response/
@@ -110,19 +117,19 @@ def assign_serial_ids(fresh: DataFrame, existing: DataFrame, key: str = "cartodb
     )
 
 
-def run_nightly(
+def enrich_nightly(
     feed: DataFrame,
     crashes: DataFrame,
     districts: DataFrame,
-    intersections: DataFrame,
     crosswalk: DataFrame,
     updates_feed: DataFrame | None = None,
-    months_window: int = 24,
-    reference_date=None,
-    top_k_size: int = 500,
-) -> dict[str, DataFrame]:
-    """Compose the full nightly DAG; returns the new table versions
-    (nothing is executed until the caller acts on them).
+) -> DataFrame:
+    """Stages 1-4 and 6-8: the night's new fact table, ingested,
+    deduplicated, reconciled, district-linked, flagged and blamed.
+
+    The one output of a caller that needs only the fact table.  Only
+    the merged input is shared, so declaring it runs the ingest, dedup
+    and serial-id shuffles, and acting on it runs the rest.
 
     ``updates_feed``: optional re-fetched window of updated source
     rows (the :updated_at path, stages 3-4); when present, tally
@@ -140,7 +147,7 @@ def run_nightly(
 
     # the merged fact table feeds THREE independent consumers (the
     # district-linkage matches branch, the wide enrichment path, and
-    # the intersection-tally branch) -- without a materialization
+    # the late-data reconciliation) -- without a materialization
     # barrier each one re-evaluates the ingest/dedup/serial-id
     # upstream from scratch (column-pruned, but still a full pass).
     # Size-aware shared materialization (r13): one lazy
@@ -204,15 +211,49 @@ def run_nightly(
         vehicle_flag_exprs,
     )
 
-    merged = allocate_blame(
-        merged, extra_cols=vehicle_flag_exprs(merged, crosswalk)
+    return allocate_blame(merged, extra_cols=vehicle_flag_exprs(merged, crosswalk))
+
+
+def run_nightly(
+    feed: DataFrame,
+    crashes: DataFrame,
+    districts: DataFrame,
+    intersections: DataFrame,
+    crosswalk: DataFrame,
+    updates_feed: DataFrame | None = None,
+    months_window: int = 24,
+    reference_date=None,
+    top_k_size: int = 500,
+) -> dict[str, DataFrame]:
+    """Compose the full nightly DAG; returns the new table versions.
+
+    Declaration runs work: the shuffle stages under each of the three
+    shared subtrees (the merged input after the extent filter, the
+    enriched fact table of :func:`enrich_nightly`, the updated
+    intersection tallies) run here, so ingest, dedup, serial ids,
+    reconciliation, district linkage, blame and the tallies execute
+    once, whichever outputs the caller writes.  Acting on the outputs
+    runs what is left: the top-k view and the final scans of the
+    shared relations.  ``updates_feed`` as in :func:`enrich_nightly`.
+    """
+    from nyc_crash_mapper_etl_script_spark.functions.materialize import (
+        share_corpus_subtree,
+    )
+
+    # the outputs fork twice: the enriched fact table is both the
+    # ``crashes`` output and the tallies' input, and the updated
+    # tallies are both the ``intersections`` output and top-k's input.
+    # Sharing each fork runs its upstream once per night instead of
+    # once per output written.
+    merged = share_corpus_subtree(
+        enrich_nightly(feed, crashes, districts, crosswalk, updates_feed)
     )
 
     # stage 5: intersection tallies + top-k view
     counts = intersection_crash_counts(
         merged, intersections, months_window=months_window, reference_date=reference_date
     )
-    inters = update_intersection_counts(intersections, counts)
+    inters = share_corpus_subtree(update_intersection_counts(intersections, counts))
     high = top_k(
         inters.where(F.col("crashcount") > 0), "crashcount", top_k_size, "cartodb_id"
     )

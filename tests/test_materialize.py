@@ -96,3 +96,22 @@ def test_operator_results_identical_on_both_branches(
     )
     assert forced == base
     spark.catalog.clearCache()
+
+
+def test_share_over_a_disk_only_share_counts_its_files(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A subtree built on a relation shared DISK_ONLY still reads
+    that relation's files, so a chain of shares over one corpus takes
+    the same branch at every link."""
+    d = _docs(spark, tmp_path_factory)
+    monkeypatch.setenv(_ENV, "0")
+    first = share_corpus_subtree(d.select("doc_id", "text"))
+    second = share_corpus_subtree(first.where(F.col("doc_id") % 2 == 0))
+    try:
+        assert file_input_bytes(second) == file_input_bytes(d)
+        assert second.storageLevel == StorageLevel.DISK_ONLY
+        assert second.count() == 100
+    finally:
+        second.unpersist()
+        first.unpersist()

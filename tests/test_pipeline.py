@@ -188,29 +188,128 @@ def test_backfill_month_filter(spark, feed):
     assert [r["socrata_id"] for r in out.collect()] == [104]
 
 
+def _updates(spark):
+    """101 re-sent with updated tallies and moved coordinates."""
+    row = dict(_feed_rows()[0])
+    row["number_of_pedestrians_injured"] = "5"
+    row["number_of_persons_injured"] = "5"
+    row["latitude"] = "1.5"   # moved from (0.5,0.5) -> still Brooklyn
+    row["longitude"] = "0.5"
+    return spark.createDataFrame(
+        [tuple(row.get(f.name) for f in SODA_FEED_SCHEMA.fields)],
+        SODA_FEED_SCHEMA,
+    )
+
+
 def test_nightly_with_updates_feed(spark, feed):
     base = run_nightly(
         feed, _empty_crashes(spark), _districts(spark), _intersections(spark),
         _crosswalk(spark), reference_date="2024-07-01",
     )["crashes"]
-    # updated tallies + moved coordinates for 101
-    upd_rows = [dict(_feed_rows()[0])]
-    upd_rows[0]["number_of_pedestrians_injured"] = "5"
-    upd_rows[0]["number_of_persons_injured"] = "5"
-    upd_rows[0]["latitude"] = "1.5"   # moved from (0.5,0.5) -> still Brooklyn
-    upd_rows[0]["longitude"] = "0.5"
-    updates = spark.createDataFrame(
-        [tuple(upd_rows[0].get(f.name) for f in SODA_FEED_SCHEMA.fields)],
-        SODA_FEED_SCHEMA,
-    )
     out = run_nightly(
         feed, base, _districts(spark), _intersections(spark), _crosswalk(spark),
-        updates_feed=updates, reference_date="2024-07-01",
+        updates_feed=_updates(spark), reference_date="2024-07-01",
     )["crashes"]
     r = {x["socrata_id"]: x for x in out.collect()}[101]
     assert r["number_of_pedestrian_injured"] == 5
     assert r["latitude"] == 1.5
     assert r["borough"] == "Brooklyn"  # re-linked after geom move
+
+
+#: the nightly batch's commit order: the fact table last
+_COMMIT_ORDER = ("intersections", "highcrash", "crashes")
+
+
+def _commit_night(spark, out, root):
+    """Overwrite three existing TxTables with a night's outputs, in
+    the nightly batch's order, under one job group.  Returns the
+    tables and the ids of the jobs the three commits submitted."""
+    from nyc_crash_mapper_etl_script_spark.sources.txtable import TxTable
+
+    tables = {}
+    for name in _COMMIT_ORDER:
+        tables[name] = TxTable(str(root / name))
+        tables[name].init(spark.createDataFrame([], out[name].schema))
+    sc = spark.sparkContext
+    group = f"commit-night-{root.name}"
+    sc.setJobGroup(group, "commit one night")
+    try:
+        for name in _COMMIT_ORDER:
+            tables[name].overwrite(out[name])
+    finally:
+        sc._jsc.clearJobGroup()
+    return tables, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_nightly_commits_do_not_rerun_the_night(spark, feed, tmp_path):
+    """The outputs fork after enrichment and after the tallies; both
+    forks are shared, so the night's joins, linkage, blame and tallies
+    run once in run_nightly and each commit submits only its own jobs:
+    the rewrite's pin and the write."""
+    out = run_nightly(
+        feed, _empty_crashes(spark), _districts(spark), _intersections(spark),
+        _crosswalk(spark), updates_feed=_updates(spark),
+        reference_date="2024-07-01",
+    )
+    tables, jobs = _commit_night(spark, out, tmp_path)
+    assert len(jobs) <= 2 * len(tables), sorted(jobs)
+    for name, table in tables.items():
+        want = out[name]
+        got = table.read(spark).select(*want.columns)
+        assert sorted(map(str, got.collect())) == sorted(map(str, want.collect())), name
+
+
+def test_disk_only_shares_released_after_a_night(spark, feed, tmp_path, monkeypatch):
+    """Past the size bound every share of a night persists DISK_ONLY;
+    the scope unpersists all three once the night is committed."""
+    from nyc_crash_mapper_etl_script_spark.functions.materialize import (
+        _ENV,
+        released_on_exit,
+    )
+
+    def disk_only_rdds():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        out = set()
+        for rid in rdds.keySet().toArray():
+            level = rdds.get(rid).getStorageLevel()
+            if level.useDisk() and not level.useMemory():
+                out.add(rid)
+        return out
+
+    # file-backed dimensions, so every shared subtree reads files
+    dims = []
+    for name, df in (("districts", _districts(spark)),
+                     ("intersections", _intersections(spark)),
+                     ("crosswalk", _crosswalk(spark))):
+        df.write.parquet(str(tmp_path / name))
+        dims.append(spark.read.parquet(str(tmp_path / name)))
+    monkeypatch.setenv(_ENV, "0")
+    before = disk_only_rdds()
+    with released_on_exit():
+        out = run_nightly(
+            feed, _empty_crashes(spark), *dims, updates_feed=_updates(spark),
+            reference_date="2024-07-01",
+        )
+        _commit_night(spark, out, tmp_path / "tables")
+        assert len(disk_only_rdds() - before) == 3
+    assert disk_only_rdds() == before
+
+
+def test_drain_times_out_loudly(spark):
+    """A drain that cannot finish stops its query and raises instead
+    of waiting forever."""
+    import time
+
+    from nyc_crash_mapper_etl_script_spark.streaming import drain
+
+    q = (
+        spark.readStream.format("rate").load()
+        .writeStream.foreachBatch(lambda df, batch_id: time.sleep(5))
+        .start()
+    )
+    with pytest.raises(TimeoutError, match="not drained in 1 s; last progress"):
+        drain(q, 1)
+    assert not q.isActive
 
 
 def test_streaming_ingest(spark, tmp_path_factory):

@@ -129,6 +129,7 @@ def _tx_rows(spark, heavy_dir: str, out: dict) -> None:
         read_txtable_stream,
     )
     from nyc_crash_mapper_etl_script_spark.sources.txtable import TxTable
+    from nyc_crash_mapper_etl_script_spark.streaming import drain
     from nyc_crash_mapper_etl_script_spark.streaming.sizing import (
         state_partitions,
         state_partitions_for,
@@ -188,7 +189,7 @@ def _tx_rows(spark, heavy_dir: str, out: dict) -> None:
                     .option("checkpointLocation", os.path.join(base, "s_ck"))
                     .start()
                 )
-                q.processAllAvailable()
+                drain(q, 1200)
                 q.stop()
                 q.awaitTermination(300)
             dt = time.time() - t0

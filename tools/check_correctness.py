@@ -17,6 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
+from nyc_crash_mapper_etl_script_spark.functions.materialize import released_on_exit
 from nyc_crash_mapper_etl_script_spark.schemas import TESTDATA_TABLES
 from nyc_crash_mapper_etl_script_spark.session import get_spark
 
@@ -77,9 +78,10 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
-            scols = sdf.columns
+            with released_on_exit():
+                sdf = fn(spark, sf_dir)
+                srows = sdf.collect()
+                scols = sdf.columns
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             results[name] = {"err": f"spark error: {e}"[:500]}
