@@ -379,7 +379,9 @@ def main() -> None:
     from nyc_crash_mapper_etl_script_spark.plans.macro_bench import nightly_e2e
 
     # the full reference main() DAG over a crash-shaped workload
-    # synthesized from `events` -- the end-to-end throughput number
+    # synthesized from `events`.  Its shares run most of the night at
+    # declaration, which runq does not time: this row's timer covers
+    # only the write of the fact table (tools/decl_bench.py times both)
     names = names + ["nightly_e2e"]
 
     def build(name):

@@ -53,8 +53,9 @@ The DISK_ONLY branch is never taken in the local bench/oracle runs
 (sf inputs are MBs), so bench timings keep re-materializing per rep
 exactly as before -- nothing is cached across timed runs.  Persisted
 relations live until they are unpersisted: :func:`released_on_exit`
-scopes them to a block (a night, a bench row), so a long-lived
-session does not pile them up.
+scopes them to a block, so a long-lived session past the bound does
+not pile them up.  It acts only past the bound; a caller there should
+run each night (each ``run_nightly`` and its commits) inside one.
 """
 
 from __future__ import annotations
@@ -70,15 +71,9 @@ from pyspark.sql import DataFrame
 _ENV = "SPARK_GRAFT_SHARED_MATERIALIZE_MAX_BYTES"
 _DEFAULT_MAX_BYTES = 32 * 1024**3
 
-#: per thread, the open :func:`released_on_exit` scopes, innermost
-#: last; each holds the relations persisted DISK_ONLY inside it
+#: ``_local.held``: the relations persisted DISK_ONLY inside this
+#: thread's open :func:`released_on_exit` block (None outside one)
 _local = threading.local()
-
-
-def _scopes() -> list[list[DataFrame]]:
-    if not hasattr(_local, "scopes"):
-        _local.scopes = []
-    return _local.scopes
 
 
 def file_input_bytes(df: DataFrame) -> int:
@@ -109,13 +104,14 @@ def share_corpus_subtree(df: DataFrame) -> DataFrame:
     storage memory.  An uninspectable plan (-1) takes the checkpoint
     branch so local behavior can never silently change.  A relation
     persisted inside a :func:`released_on_exit` block is unpersisted
-    when the innermost such block exits."""
+    when the block exits."""
     bound = int(os.environ.get(_ENV, _DEFAULT_MAX_BYTES))
     if file_input_bytes(df) <= bound:
         return df.localCheckpoint(eager=False)
     out = df.persist(StorageLevel.DISK_ONLY)
-    if _scopes():
-        _scopes()[-1].append(out)
+    held = getattr(_local, "held", None)
+    if held is not None:
+        held.append(out)
     return out
 
 
@@ -124,13 +120,12 @@ def released_on_exit() -> Iterator[None]:
     """Unpersist, on exit, every relation :func:`share_corpus_subtree`
     persisted DISK_ONLY on this thread inside the block.  Act on the
     shared plan inside the block: after it, its consumers recompute
-    the subtree.  The checkpoint branch needs no scope; its blocks go
-    when the plan is no longer referenced."""
-    held: list[DataFrame] = []
-    _scopes().append(held)
+    the subtree.  Blocks do not nest.  The checkpoint branch needs no
+    scope; its blocks go when the plan is no longer referenced."""
+    _local.held = []
     try:
         yield
     finally:
-        _scopes().pop()
+        held, _local.held = _local.held, None
         for df in held:
             df.unpersist()

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_crash_mapper_etl_script_spark.plans.nightly import enrich_nightly
+from nyc_crash_mapper_etl_script_spark.plans.nightly import run_nightly
 from nyc_crash_mapper_etl_script_spark.schemas import CRASHES_SCHEMA, load_table
 
 #: vehicle text seen in the synthetic feed -> canonical code
@@ -174,12 +174,20 @@ def _synth_dims_build(spark: SparkSession):
 
 
 def nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The nightly's fact-table path at harness scale; returns the
-    enriched fact table (act on it to execute the graph behind it)."""
+    """The full nightly DAG at harness scale; returns the enriched
+    fact table (act on it to execute the whole graph)."""
     feed = synth_feed(spark, sf_dir)
-    districts, _, crosswalk = synth_dims(spark)
+    districts, intersections, crosswalk = synth_dims(spark)
     ek = ("empty", id(spark._jsparkSession))
     if ek not in _dims_cache:
         _dims_cache[ek] = spark.createDataFrame([], CRASHES_SCHEMA)
     empty = _dims_cache[ek]
-    return enrich_nightly(feed, empty, districts, crosswalk)
+    out = run_nightly(
+        feed,
+        empty,
+        districts,
+        intersections,
+        crosswalk,
+        months_window=None,
+    )
+    return out["crashes"]

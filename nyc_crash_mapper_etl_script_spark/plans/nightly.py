@@ -117,19 +117,34 @@ def assign_serial_ids(fresh: DataFrame, existing: DataFrame, key: str = "cartodb
     )
 
 
-def enrich_nightly(
+def run_nightly(
     feed: DataFrame,
     crashes: DataFrame,
     districts: DataFrame,
+    intersections: DataFrame,
     crosswalk: DataFrame,
     updates_feed: DataFrame | None = None,
-) -> DataFrame:
-    """Stages 1-4 and 6-8: the night's new fact table, ingested,
-    deduplicated, reconciled, district-linked, flagged and blamed.
+    months_window: int = 24,
+    reference_date=None,
+    top_k_size: int = 500,
+) -> dict[str, DataFrame]:
+    """Compose the full nightly DAG; returns the new table versions.
 
-    The one output of a caller that needs only the fact table.  Only
-    the merged input is shared, so declaring it runs the ingest, dedup
-    and serial-id shuffles, and acting on it runs the rest.
+    Declaration runs work: the shuffle stages under each of the three
+    shared subtrees (the merged input after the extent filter, the
+    enriched fact table, the updated intersection tallies) run here,
+    so ingest, dedup, serial ids, reconciliation, district linkage,
+    blame and the tallies execute once, whichever outputs the caller
+    writes; a caller that writes only ``crashes`` still pays for the
+    tallies.  Acting on the outputs runs what is left: the top-k view
+    and the final scans of the shared relations.
+
+    Under the size bound of ``functions/materialize.py`` the shares
+    are localCheckpoints, held in executor storage until the returned
+    frames are no longer referenced: a caller that pins the fact table
+    again (``TxTable.overwrite`` does) holds up to three copies of it
+    at once, and a lost executor cannot recompute them, so it fails
+    the night even between two commits.
 
     ``updates_feed``: optional re-fetched window of updated source
     rows (the :updated_at path, stages 3-4); when present, tally
@@ -211,42 +226,13 @@ def enrich_nightly(
         vehicle_flag_exprs,
     )
 
-    return allocate_blame(merged, extra_cols=vehicle_flag_exprs(merged, crosswalk))
-
-
-def run_nightly(
-    feed: DataFrame,
-    crashes: DataFrame,
-    districts: DataFrame,
-    intersections: DataFrame,
-    crosswalk: DataFrame,
-    updates_feed: DataFrame | None = None,
-    months_window: int = 24,
-    reference_date=None,
-    top_k_size: int = 500,
-) -> dict[str, DataFrame]:
-    """Compose the full nightly DAG; returns the new table versions.
-
-    Declaration runs work: the shuffle stages under each of the three
-    shared subtrees (the merged input after the extent filter, the
-    enriched fact table of :func:`enrich_nightly`, the updated
-    intersection tallies) run here, so ingest, dedup, serial ids,
-    reconciliation, district linkage, blame and the tallies execute
-    once, whichever outputs the caller writes.  Acting on the outputs
-    runs what is left: the top-k view and the final scans of the
-    shared relations.  ``updates_feed`` as in :func:`enrich_nightly`.
-    """
-    from nyc_crash_mapper_etl_script_spark.functions.materialize import (
-        share_corpus_subtree,
-    )
-
     # the outputs fork twice: the enriched fact table is both the
     # ``crashes`` output and the tallies' input, and the updated
     # tallies are both the ``intersections`` output and top-k's input.
     # Sharing each fork runs its upstream once per night instead of
     # once per output written.
     merged = share_corpus_subtree(
-        enrich_nightly(feed, crashes, districts, crosswalk, updates_feed)
+        allocate_blame(merged, extra_cols=vehicle_flag_exprs(merged, crosswalk))
     )
 
     # stage 5: intersection tallies + top-k view

@@ -1,16 +1,17 @@
-"""Declaration and execution cost of the nightly's fact-table path
-(``macro_bench.nightly_e2e``).
+"""Declaration and execution cost of the nightly DAG
+(``macro_bench.nightly_e2e``: ``run_nightly``'s fact-table output).
 
 A service-style caller re-declares the nightly per run; plancache
 makes the dimension-stat driver jobs free.  Declaration is Catalyst
 analysis of the wide trees plus what localCheckpoint(eager=False)
 forces where it is declared: physical planning, codegen and, under
-AQE, every shuffle stage below the checkpoint (here the merged
-input's ingest, dedup and serial ids).  Compare decl+exec totals, not
-declaration alone.  ``run_nightly`` also shares the enriched fact
-table and the tallies where its three outputs fork, so declaring it
-runs most of the night; perfbench's ``nightly_batch`` traces that
-split (``plans.decl_s`` against ``operators.exec_s``).
+AQE, every shuffle stage below the checkpoint.  ``run_nightly``
+shares the merged input, the enriched fact table and the tallies, so
+declaring it runs most of the night (the tallies too, which this
+one-output caller never writes) and writing the fact table runs
+little.  Compare decl+exec totals, not declaration alone; perfbench's
+``nightly_batch`` traces the same split (``plans.decl_s`` against
+``operators.exec_s``).
 
 Usage: python tools/decl_bench.py [reps]  (SPARK_GRAFT_SF_DIR as in bench.py)
 Prints per-rep decl/exec seconds and the min of each and of their sum.
