@@ -1,8 +1,22 @@
-"""Size-aware materialization of multiply-consumed plan subtrees.
+"""The one materialization policy: dimensions become driver-local
+relations, and multiply-consumed corpus subtrees are shared.
 
-Catalyst clones a DataFrame's upstream plan into every consumer, so an
-operator whose intermediate feeds 2+ branches re-executes the whole
-subtree per branch unless the subtree is materialized once.  The r12
+:func:`local_dimension` collects a dimension (district polygons,
+intersection circles, a crosswalk) to the driver once per session and
+plan, as Arrow, and re-declares it from those rows.  Under Spark's
+``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+default) the result plans as a ``LocalRelation``; above it, as a
+JVM-side Arrow RDD.  Either way no later scan of it starts a Python
+worker or lists a file, whatever plan the caller passed in (a
+``createDataFrame`` over Python lists is a Python RDD, re-run through
+the Python workers by every action).  A dimension must be
+driver-sized, as it already is wherever it is broadcast.
+
+:func:`share_corpus_subtree` materializes a corpus-scale subtree
+once.  Catalyst clones a DataFrame's upstream plan into every
+consumer, so an operator whose intermediate feeds 2+ branches
+re-executes the whole subtree per branch unless the subtree is
+materialized once.  The r12
 optimization round used ``localCheckpoint(eager=False)`` for that
 everywhere; for DIMENSION-sized relations (aggregates, norms, per-key
 summaries) that is unconditionally right.  For CORPUS-sized relations
@@ -68,6 +82,8 @@ from typing import Iterator
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
+from nyc_crash_mapper_etl_script_spark import plancache
+
 _ENV = "SPARK_GRAFT_SHARED_MATERIALIZE_MAX_BYTES"
 _DEFAULT_MAX_BYTES = 32 * 1024**3
 
@@ -92,6 +108,23 @@ def file_input_bytes(df: DataFrame) -> int:
         return total
     except Exception:  # noqa: BLE001 -- estimate is best-effort
         return -1
+
+
+def local_dimension(df: DataFrame) -> DataFrame:
+    """``df`` re-declared from its rows collected to the driver as
+    Arrow: a local relation with ``df``'s schema.  Memoized on
+    ``df``'s plan identity (plancache) and its session, so each
+    dimension is collected once per session; a parquet dimension
+    rewritten at the same path keys differently (plancache folds in
+    the file listing), and a later session never gets a frame bound
+    to a stopped one."""
+    spark = df.sparkSession
+    return plancache.memo(
+        df,
+        "local_dimension",
+        (id(spark._jsparkSession),),
+        lambda: spark.createDataFrame(df.toArrow(), schema=df.schema),
+    )
 
 
 def share_corpus_subtree(df: DataFrame) -> DataFrame:

@@ -6,9 +6,11 @@ DIMENSION input before they can declare their plan (the borough
 extent box in ``filter_to_extent``, the crosswalk alias map in
 ``vehicle_flags``, the max serial key in ``assign_serial_ids``, the
 grid shape decided by ``spatial_join._grid_plan``, the IVF quantizer
-rows).  Each one is a bounded driver job — correct, but a
-service-style caller that re-declares the nightly DAG every run pays
-every job again even though the dimensions have not changed.  That
+rows), and ``functions.materialize.local_dimension`` collects a whole
+dimension to the driver.  Each one is a bounded driver job —
+correct, but a service-style caller that re-declares the nightly DAG
+every run pays every job again even though the dimensions have not
+changed.  That
 repeated cost was the measured ~7 s cold-plan build (SURVEY
 "Performance note"; VERDICT r2 "What's missing" #3).
 

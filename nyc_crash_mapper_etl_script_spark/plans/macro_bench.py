@@ -103,10 +103,12 @@ def _synth_feed_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: dimension DataFrames cached per live session: `createDataFrame`
-#: yields a NEW RDD-backed plan each call, which defeats plan-identity
-#: memoization (plancache) of the dimension-stat driver jobs — reusing
-#: the same DataFrame objects is what a service-style caller does with
-#: unchanged dimensions, and it lets every downstream stat job hit
+#: yields a NEW Python-RDD-backed plan each call, which defeats
+#: plan-identity memoization (plancache) -- reusing the same DataFrame
+#: objects is what a service-style caller does with unchanged
+#: dimensions.  It lets `run_nightly`'s `local_dimension` hit, so the
+#: Python RDDs are scanned once per session (the first night), and
+#: every later night and downstream stat job reads the local relations
 _dims_cache: dict = {}
 
 

@@ -226,6 +226,21 @@ def _path_partition_cols(rel: str) -> frozenset[str]:
     )
 
 
+def _pinned(df: DataFrame) -> DataFrame:
+    """``df`` with its rows fixed before a rewrite retires any file:
+    ``df`` itself when its plan is already a scan of a locally
+    checkpointed RDD (``localCheckpoint``, or ``share_corpus_subtree``
+    under its bound), whose blocks the write computes once and keeps;
+    otherwise an eager localCheckpoint of ``df``."""
+    plan = df._jdf.queryExecution().analyzed()
+    if (
+        plan.getClass().getSimpleName() == "LogicalRDD"
+        and plan.rdd().isLocallyCheckpointed()
+    ):
+        return df
+    return df.localCheckpoint()
+
+
 class MixedPartitionLayoutError(RuntimeError):
     """A partition-pruned read found live files WITHOUT the hive
     ``col=`` path component: rows of unknown partition value that
@@ -3119,8 +3134,9 @@ class TxTable:
         """THE read-modify-write transaction: recover, ONE snapshot,
         ``plan(base_version)`` -> ``(removes, frame, column_map)`` or
         None (nothing to do: no commit, returns None), pin ``frame``
-        with one eager localCheckpoint (it reads the very files
-        finalize retires), stage, commit against the snapshot.  Every
+        (it may read the very files finalize retires; a frame already
+        locally checkpointed is its own pin, see :func:`_pinned`),
+        stage, commit against the snapshot.  Every
         read ``plan`` makes -- schema and column map included -- pins
         to that version or runs after it: a pair torn across two
         versions could rebase past a concurrent append and publish,
@@ -3138,7 +3154,7 @@ class TxTable:
             if planned is None:
                 return None
             removes, frame, column_map = planned
-            mapping, schema = self._stage(frame.localCheckpoint(), column_map)
+            mapping, schema = self._stage(_pinned(frame), column_map)
         except Exception as e:  # noqa: BLE001 -- translated or re-raised
             if undo is not None:
                 undo()

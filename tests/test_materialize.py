@@ -1,5 +1,5 @@
-"""Pins for the r13 size-aware shared-materialization policy
-(functions/materialize.py).
+"""Pins for the materialization policy (functions/materialize.py):
+dimensions become local relations, corpus subtrees are shared.
 
 Contract: under the input-bytes bound (the whole local/bench regime)
 ``share_corpus_subtree`` IS ``localCheckpoint(eager=False)`` -- plans
@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from nyc_crash_mapper_etl_script_spark.functions.materialize import (
     _ENV,
     file_input_bytes,
+    local_dimension,
     share_corpus_subtree,
 )
 
@@ -115,3 +116,70 @@ def test_share_over_a_disk_only_share_counts_its_files(
     finally:
         second.unpersist()
         first.unpersist()
+
+
+_DIM_SCHEMA = (
+    "id int, n int, ring array<struct<x:double,y:double>>, "
+    "geom struct<center:struct<lng:double,lat:double>,radius_m:double>"
+)
+
+
+def _dim(spark, offset=0):
+    return spark.createDataFrame(
+        [
+            (1 + offset, None, [(0.0, 0.0), (1.0, 0.5)], ((0.1, 0.2), 80.0)),
+            (2 + offset, 7, [], ((1.5, 0.5), 8.0)),
+            (3 + offset, None, None, None),
+        ],
+        _DIM_SCHEMA,
+    )
+
+
+def test_local_dimension_same_rows_as_a_local_relation(spark):
+    d = _dim(spark)
+    out = local_dimension(d)
+    assert out.schema == d.schema
+    assert out.collect() == d.collect()
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def test_local_dimension_second_call_is_memoized(spark):
+    d = _dim(spark, offset=10)
+    first = local_dimension(d)
+    sc = spark.sparkContext
+    sc.setJobGroup("local-dim-again", "second local_dimension call")
+    try:
+        again = local_dimension(d)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert again is first
+    assert list(sc.statusTracker().getJobIdsForGroup("local-dim-again")) == []
+
+
+def test_local_dimension_sees_a_same_path_overwrite(spark, tmp_path):
+    p = str(tmp_path / "dim")
+    _dim(spark).write.parquet(p)
+    before = local_dimension(spark.read.parquet(p))
+    _dim(spark, offset=100).write.mode("overwrite").parquet(p)
+    after = local_dimension(spark.read.parquet(p))
+    assert sorted(r["id"] for r in before.collect()) == [1, 2, 3]
+    assert sorted(r["id"] for r in after.collect()) == [101, 102, 103]
+
+
+def test_local_dimension_memo_is_per_session(spark, tmp_path):
+    """A parquet dimension's plan key is the same in every session, so
+    the session is part of the memo key: another session gets a frame
+    of its own, not one bound to the first."""
+    from nyc_crash_mapper_etl_script_spark.plancache import plan_key
+
+    p = str(tmp_path / "dim")
+    _dim(spark).write.parquet(p)
+    other = spark.newSession()
+    assert plan_key(spark.read.parquet(p)) == plan_key(other.read.parquet(p))
+    mine = local_dimension(spark.read.parquet(p))
+    assert local_dimension(spark.read.parquet(p)) is mine
+    theirs = local_dimension(other.read.parquet(p))
+    assert theirs is not mine
+    assert theirs.sparkSession is other
+    assert theirs.collect() == mine.collect()

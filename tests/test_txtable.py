@@ -47,6 +47,22 @@ def test_init_read_roundtrip(spark, table):
     assert _as_dict(spark.read.parquet(table.root)) == _as_dict(table.read(spark))
 
 
+def test_overwrite_takes_a_checkpointed_frame_as_its_own_pin(spark, table):
+    """A frame already locally checkpointed is written without a second
+    pin, even when it reads the very files the overwrite retires: the
+    write computes its blocks once, before the commit."""
+    from nyc_crash_mapper_etl_script_spark.sources.txtable import _pinned
+
+    fresh = _rows(spark, [(9, "z", "2024-07")])
+    assert _pinned(fresh) is not fresh
+    own = table.read(spark).where(F.col("k") != 2).localCheckpoint(eager=False)
+    assert _pinned(own) is own
+    table.overwrite(own)
+    want = {1: ("a", "2024-05"), 3: ("c", "2024-06")}
+    assert _as_dict(table.read(spark)) == want
+    assert _as_dict(own) == want
+
+
 def test_append_and_merge_semantics(spark, table):
     table.append(_rows(spark, [(4, "d", "2024-06")]))
     # merge: replace k=2, insert k=5

@@ -2,7 +2,8 @@
 (``macro_bench.nightly_e2e``: ``run_nightly``'s fact-table output).
 
 A service-style caller re-declares the nightly per run; plancache
-makes the dimension-stat driver jobs free.  Declaration is Catalyst
+makes the dimension-stat driver jobs free, and the dimensions are
+local relations after the first run (``local_dimension``).  Declaration is Catalyst
 analysis of the wide trees plus what localCheckpoint(eager=False)
 forces where it is declared: physical planning, codegen and, under
 AQE, every shuffle stage below the checkpoint.  ``run_nightly``
