@@ -184,14 +184,13 @@ def unmapped_vehicle_types(crashes: DataFrame, crosswalk: DataFrame) -> DataFram
                         "nyc_vehicletype", "left_anti")
 
 
-def intersection_crash_counts(
-    crashes: DataFrame,
-    intersections: DataFrame,
-    months_window: int | None = 24,
-    reference_date=None,
+def circle_matches(
+    crashes: DataFrame, intersections: DataFrame, carry: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Per-intersection crash count: injury/fatality crashes inside
-    each circle over the trailing window (main.py:618-647).
+    """One ``(cartodb_id, *carry)`` row per injury/fatality crash
+    inside each intersection circle: the match grain that
+    :func:`intersection_crash_counts` counts and the continuous
+    nightly's rollup stream folds (carrying ``_change_type``).
 
     Grid-bucketed equi-join (spatial_join.points_in_circles): hash
     join on cell id, exact haversine only on same-cell pairs -- at
@@ -205,18 +204,31 @@ def intersection_crash_counts(
     filtered = crashes.where(
         (F.col("number_of_persons_injured") > 0) | (F.col("number_of_persons_killed") > 0)
     ).where(F.col("the_geom").isNotNull())
-    if months_window is not None:
-        ref = F.lit(reference_date).cast("date") if reference_date is not None else F.current_date()
-        filtered = filtered.where(
-            F.col("date_val") >= F.add_months(ref, -months_window)
-        )
     circles = intersections.select(
         F.col("cartodb_id").alias("__i_id"),
         F.col("the_geom.center").alias("center"),
         F.col("the_geom.radius_m").alias("radius_m"),
     )
-    joined = points_in_circles(filtered.select("the_geom"), circles, how="inner")
-    return joined.groupBy(F.col("g.__i_id").alias("cartodb_id")).agg(
+    joined = points_in_circles(
+        filtered.select("the_geom", *carry), circles, how="inner"
+    )
+    return joined.select(
+        F.col("g.__i_id").alias("cartodb_id"), *[F.col(f"p.{c}") for c in carry]
+    )
+
+
+def intersection_crash_counts(
+    crashes: DataFrame,
+    intersections: DataFrame,
+    months_window: int | None = 24,
+    reference_date=None,
+) -> DataFrame:
+    """Per-intersection crash count: injury/fatality crashes inside
+    each circle over the trailing window (main.py:618-647)."""
+    if months_window is not None:
+        ref = F.lit(reference_date).cast("date") if reference_date is not None else F.current_date()
+        crashes = crashes.where(F.col("date_val") >= F.add_months(ref, -months_window))
+    return circle_matches(crashes, intersections).groupBy("cartodb_id").agg(
         F.count("*").alias("howmany")
     )
 

@@ -30,8 +30,7 @@ any append/overwrite the relation can see changes the listing and
 the key.  (If Spark's own listing cache is stale, the memoized stat
 is exactly what a recompute would return against that same stale
 view — the cache never introduces a divergence Spark itself would
-not have.)  ``clear()`` resets, and ``SPARK_GRAFT_NO_PLANCACHE=1``
-disables for debugging.
+not have.)  ``clear()`` resets the cache.
 
 At 100 TB the cached jobs are all dimension-sized (polygon extents,
 an 8-row crosswalk, parquet-stat max of a key column, n_cells
@@ -41,7 +40,6 @@ large scan.
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 from typing import Any, Callable
 
@@ -68,10 +66,6 @@ def plan_key(df: DataFrame) -> tuple:
     return ("sem", qe.analyzed().semanticHash(), len(files), listing)
 
 
-def enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_NO_PLANCACHE", "") != "1"
-
-
 def clear() -> None:
     _cache.clear()
 
@@ -84,8 +78,6 @@ def memo(df: DataFrame, tag: str, params: tuple, compute: Callable[[], Any]) -> 
     returned verbatim, so it must be immutable from the caller's
     perspective.
     """
-    if not enabled():
-        return compute()
     try:
         key = (tag, params, plan_key(df))
     except Exception:  # plan not hashable (e.g. foreign session state)

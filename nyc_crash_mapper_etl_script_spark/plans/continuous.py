@@ -2,42 +2,48 @@
 
 ``plans/nightly.py`` reproduces the reference main() as one batch DAG
 (cron-shaped, like the original).  This module is the streaming
-promotion of the same semantics: a Structured Streaming query whose
-every micro-batch performs the full ingest->dedup->enrich->blame->
-reconcile->rollup cycle INCREMENTALLY against transactional state --
-what the reference would be if it were built stream-first instead of
-as an hours-long nightly batch (SURVEY §2.9; main.py:1132-1200).
+promotion of the same semantics, as two chained Structured Streaming
+queries over transactional state -- what the reference would be if it
+were built stream-first instead of as an hours-long nightly batch
+(SURVEY §2.9; main.py:1132-1200).
 
-Per micro-batch (foreachBatch -- the sink owns multi-action
-transactional logic):
+Stream 1, ingest (feed -> month-partitioned fact TxTable), per
+micro-batch (foreachBatch -- the sink owns multi-action transactional
+logic):
 
-1. in-batch dedup + anti-join against the month-partitioned fact
-   TxTable -> the INSERT set (reference main.py:85-132 semantics);
+1. in-batch dedup + anti-join against the fact table -> the INSERT
+   set (reference main.py:85-132 semantics);
 2. the insert set alone is enriched: serial ids continue from the
    table's max key, extent sanity filter, district point-in-polygon
    linkage, vehicle flags + blame allocation folded into one pass --
    O(batch) work, never a table rewrite;
 3. enriched inserts APPEND (blind, multi-writer-safe);
 4. already-present keys are the UPDATE set: tally mismatches merge
-   into only the touched month partitions (C2);
-5. the intersection crashcount rollup (the reference's ~10-min
-   materialized view rebuild) is maintained INCREMENTALLY: the
-   insert set's circle matches delta-refresh a grouped-count MV
-   TxTable via ``refresh_additive_mv`` -- O(batch) against O(table).
+   into only the touched month partitions (C2).
 
-Updates are handled EXACTLY, not approximately: step 4's tally merge
-also feeds the rollup a signed delta (retract the old rows' circle
-matches, insert the repaired rows' -- ``operators.mv.
-refresh_signed_mv``), so membership-changing updates (a crash whose
-injured count flips between 0 and >0) keep the view equal to a full
-recompute with O(updated rows) work.  :func:`rebuild_rollup` remains
-as the belt-and-braces periodic repair (the reference's own answer),
-no longer required for correctness.
+Stream 2, rollup (fact table's commit log -> intersection crashcount
+view, the reference's ~10-min materialized view rebuild):
+:func:`chain_rollup_stream` reads the fact table's change feed, maps
+it to circle matches with ``_change_type`` carried through
+(``operators.enrichment.circle_matches``) and folds them into the view
+with signed-delta arithmetic.  An update's file-level retraction
+decrements the old circles and the repaired row increments the new
+ones, so membership-changing updates (a crash whose injured count
+flips between 0 and >0) keep the view equal to a full recompute with
+O(changed files) work.
+
+Both sinks are replay-safe.  A replayed ingest batch finds its rows
+already in the table and writes nothing new; the rollup stream keeps
+its fact-table version in its own checkpoint and records its batch id
+in each rollup commit, so a process killed between any two commits
+resumes to the same view.  :func:`rebuild_rollup` remains the
+reference's periodic full recompute.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,19 +52,23 @@ from pyspark.sql.streaming import StreamingQuery
 from nyc_crash_mapper_etl_script_spark.operators.blame import allocate_blame
 from nyc_crash_mapper_etl_script_spark.operators.dedup_merge import new_rows
 from nyc_crash_mapper_etl_script_spark.operators.enrichment import (
+    circle_matches,
     filter_to_extent,
     intersection_crash_counts,
     link_districts,
     vehicle_flag_exprs,
 )
 from nyc_crash_mapper_etl_script_spark.operators.ingest import normalize_soda_feed
-from nyc_crash_mapper_etl_script_spark.operators.mv import refresh_additive_mv
 from nyc_crash_mapper_etl_script_spark.operators.reconcile import (
     apply_tally_updates,
     tally_mismatches,
 )
 from nyc_crash_mapper_etl_script_spark.plans.nightly import assign_serial_ids
 from nyc_crash_mapper_etl_script_spark.schemas import SODA_FEED_SCHEMA
+from nyc_crash_mapper_etl_script_spark.sources.txstream import (
+    CHANGE_COL,
+    read_txtable_stream,
+)
 from nyc_crash_mapper_etl_script_spark.sources.txtable import TxTable
 
 
@@ -80,23 +90,21 @@ def continuous_nightly(
     intersections: DataFrame,
     crosswalk: DataFrame,
     trigger_available_now: bool = True,
-    coupled_rollup: bool = True,
-) -> StreamingQuery:
-    """Start the continuous nightly; returns the query handle.
+) -> tuple[StreamingQuery, Callable[[], StreamingQuery]]:
+    """Start the ingest stream; returns ``(ingest_query,
+    start_rollup)``.
 
     State lives in two TxTables: the month-partitioned enriched fact
-    table at ``table_path`` and the (cartodb_id, howmany) rollup at
-    ``rollup_path``.  ``trigger_available_now=True`` drains the feed
-    dir then stops (cron-equivalent, restart-safe); False runs
-    continuous micro-batches.
-
-    ``coupled_rollup=False`` turns OFF the in-sink rollup
-    maintenance and writes the fact table with
-    ``retain_history=True`` instead: the rollup then belongs to a
-    SEPARATE stream chained off the fact table's commit log
-    (:func:`continuous_nightly_chained`), which is the decoupled
-    form -- the ingest writer and any number of downstream consumers
-    restart independently, the commit log is the only contract."""
+    table at ``table_path`` (written with ``retain_history=True`` so
+    its change feed stays readable) and the (cartodb_id, howmany)
+    rollup at ``rollup_path``.  ``start_rollup()`` starts the rollup
+    stream off the fact table's commit log; call it after -- or
+    concurrently with -- the ingest query.  Each stream keeps its own
+    checkpoint under ``checkpoint_dir`` and restarts independently;
+    the commit log is the only coupling.
+    ``trigger_available_now=True`` drains what is there then stops
+    (cron-equivalent, restart-safe); False runs continuous
+    micro-batches."""
     raw = spark.readStream.schema(SODA_FEED_SCHEMA).json(feed_dir)
     normalized = normalize_soda_feed(raw)
 
@@ -105,11 +113,7 @@ def continuous_nightly(
         batch = batch.dropDuplicates(["socrata_id"]).withColumn(
             "__ym", F.concat_ws("-", "year", "month")
         ).localCheckpoint()
-        tx = TxTable(
-            table_path,
-            partition_by=["__ym"],
-            retain_history=not coupled_rollup,
-        )
+        tx = TxTable(table_path, partition_by=["__ym"], retain_history=True)
         if tx.exists():
             existing = tx.read(s)
             fresh = new_rows(batch, existing, "socrata_id")
@@ -128,10 +132,6 @@ def continuous_nightly(
                 tx.append(enriched)
             else:
                 tx.init(enriched)
-            if coupled_rollup:  # else the chained stream owns the view
-                _maintain_rollup_inline(
-                    s, rollup_path, enriched, intersections
-                )
         # update set: tally reconcile into touched months only (C2)
         if tx.exists():
             updated = batch.join(
@@ -148,98 +148,29 @@ def continuous_nightly(
                         to_fix, mismatches, "socrata_id"
                     ).localCheckpoint()
                     tx.merge(repaired, "socrata_id")
-                    if coupled_rollup:
-                        # SIGNED rollup repair: retraction of the old
-                        # rows + insertion of the repaired ones keeps
-                        # the view exact under membership-changing
-                        # updates (refresh_signed_mv)
-                        _signed_rollup_repair(s, rollup_path, to_fix,
-                                              repaired, intersections)
 
     writer = normalized.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+        "checkpointLocation", checkpoint_dir + "/ingest"
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    q_ingest = writer.start()
 
-
-def _maintain_rollup_inline(s, rollup_path, enriched, intersections):
-    """The coupled per-batch rollup refresh (insert path)."""
-    delta_counts = intersection_crash_counts(
-        enriched, intersections, months_window=None
-    )
-    # refresh_additive_mv combines RAW delta rows; the circle join
-    # already aggregated, so reuse the matched pairs at delta grain
-    mv = TxTable(rollup_path)
-    if mv.exists():
-        cur = mv.read(s)
-        fused = refresh_additive_mv(
-            cur,
-            _circle_matches(enriched, intersections),
-            group_cols=["cartodb_id"],
+    def start_rollup() -> StreamingQuery:
+        return chain_rollup_stream(
+            spark,
+            TxTable(table_path, partition_by=["__ym"], retain_history=True),
+            TxTable(rollup_path),
+            ["cartodb_id"],
+            checkpoint_dir + "/rollup",
             count_col="howmany",
-        ).localCheckpoint()
-        mv.merge(fused, "cartodb_id")
-    else:
-        mv.init(delta_counts.localCheckpoint())
+            trigger_available_now=trigger_available_now,
+            transform=lambda feed: circle_matches(
+                feed, intersections, carry=(CHANGE_COL,)
+            ),
+        )
 
-
-def _signed_rollup_repair(
-    spark: SparkSession,
-    rollup_path: str,
-    old_rows: DataFrame,
-    new_rows_df: DataFrame,
-    intersections: DataFrame,
-) -> None:
-    """Adjust the rollup for an UPDATE: retract the old rows' circle
-    matches, insert the new rows' -- counts-only refresh_signed_mv,
-    O(updated rows).  Touched circles whose count reaches zero are
-    deleted from the rollup table."""
-    from pyspark.sql import functions as FF
-
-    from nyc_crash_mapper_etl_script_spark.operators.mv import refresh_signed_mv
-
-    mv = TxTable(rollup_path)
-    if not mv.exists():
-        return
-    dels = _circle_matches(old_rows, intersections).localCheckpoint()
-    ins = _circle_matches(new_rows_df, intersections).localCheckpoint()
-    if not dels.limit(1).count() and not ins.limit(1).count():
-        return
-    cur = mv.read(spark)
-    fused = refresh_signed_mv(
-        cur, ins, dels, ["cartodb_id"], count_col="howmany"
-    ).localCheckpoint()
-    mv.merge(fused, "cartodb_id")
-    touched = dels.unionByName(ins).select("cartodb_id").distinct()
-    gone = (
-        touched.join(fused.select("cartodb_id"), "cartodb_id", "left_anti")
-        .join(mv.read(spark).select("cartodb_id"), "cartodb_id", "left_semi")
-        .localCheckpoint()
-    )
-    if gone.limit(1).count():
-        mv.delete(gone.select(FF.col("cartodb_id")), "cartodb_id")
-
-
-def _circle_matches(crashes: DataFrame, intersections: DataFrame) -> DataFrame:
-    """(crash, circle) match rows -- the raw delta grain
-    ``refresh_additive_mv`` aggregates per cartodb_id."""
-    from nyc_crash_mapper_etl_script_spark.operators.spatial_join import (
-        points_in_circles,
-    )
-
-    filtered = crashes.where(
-        (F.col("number_of_persons_injured") > 0)
-        | (F.col("number_of_persons_killed") > 0)
-    ).where(F.col("the_geom").isNotNull())
-    circles = intersections.select(
-        F.col("cartodb_id").alias("__i_id"),
-        F.col("the_geom.center").alias("center"),
-        F.col("the_geom.radius_m").alias("radius_m"),
-    )
-    joined = points_in_circles(filtered.select("the_geom"), circles, how="inner")
-    return joined.select(F.col("g.__i_id").alias("cartodb_id"))
+    return q_ingest, start_rollup
 
 
 def rebuild_rollup(
@@ -249,21 +180,18 @@ def rebuild_rollup(
     intersections: DataFrame,
 ) -> None:
     """Periodic full recompute of the rollup (the reference's nightly
-    MV rebuild): repairs drift from membership-changing UPDATES that
-    the insert-only incremental path cannot see."""
-    tx = TxTable(table_path, partition_by=["__ym"])
+    MV rebuild), replacing the view in one atomic ``overwrite``
+    commit.  Run it while the rollup stream is caught up with the
+    fact table: the stream folds later commits onto the rebuilt view,
+    so a change it had not yet folded would be counted twice."""
     counts = intersection_crash_counts(
-        tx.read(spark), intersections, months_window=None
-    ).localCheckpoint()
+        TxTable(table_path, partition_by=["__ym"]).read(spark),
+        intersections,
+        months_window=None,
+    )
     mv = TxTable(rollup_path)
     if mv.exists():
-        # full-state replace: merge on the key set union
-        mv.merge(counts, "cartodb_id")
-        stale = mv.read(spark).join(
-            counts.select("cartodb_id"), "cartodb_id", "left_anti"
-        )
-        if stale.limit(1).count():
-            mv.delete(stale.select("cartodb_id"), "cartodb_id")
+        mv.overwrite(counts)
     else:
         mv.init(counts)
 
@@ -328,10 +256,6 @@ def chain_rollup_stream(
         refresh_signed_mv,
         signed_mv_init,
     )
-    from nyc_crash_mapper_etl_script_spark.sources.txstream import (
-        CHANGE_COL,
-        read_txtable_stream,
-    )
 
     app_id = f"chain_rollup:{os.path.abspath(checkpoint_dir)}"
 
@@ -383,80 +307,3 @@ def chain_rollup_stream(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def continuous_nightly_chained(
-    spark: SparkSession,
-    feed_dir: str,
-    table_path: str,
-    rollup_path: str,
-    checkpoint_dir: str,
-    districts: DataFrame,
-    intersections: DataFrame,
-    crosswalk: DataFrame,
-) -> tuple[StreamingQuery, "callable"]:
-    """The DECOUPLED nightly: ingest and rollup as two chained
-    streams instead of one foreachBatch doing both.
-
-    Stream 1 (returned query): feed -> enriched fact TxTable ONLY
-    (``coupled_rollup=False``; the table retains history so its
-    change feed stays readable).  Stream 2 (returned thunk; call it
-    after -- or concurrently with -- stream 1): the fact table's
-    commit log -> per-circle signed rollup via
-    :func:`chain_rollup_stream`, with the spatial circle-match join
-    applied to the change feed as the transform (``_change_type``
-    rides through the join, so an update's retraction decrements the
-    old circles and the repaired row increments the new ones -- the
-    same exactness contract as the coupled form, now across a
-    process boundary).  Either side restarts independently from its
-    own checkpoint; the commit log is the only coupling.
-    """
-    q_ingest = continuous_nightly(
-        spark,
-        feed_dir,
-        table_path,
-        rollup_path,
-        checkpoint_dir + "/ingest",
-        districts,
-        intersections,
-        crosswalk,
-        trigger_available_now=True,
-        coupled_rollup=False,
-    )
-
-    from nyc_crash_mapper_etl_script_spark.sources.txstream import CHANGE_COL
-
-    def circle_transform(batch: DataFrame) -> DataFrame:
-        from nyc_crash_mapper_etl_script_spark.operators.spatial_join import (
-            points_in_circles,
-        )
-
-        filtered = batch.where(
-            (F.col("number_of_persons_injured") > 0)
-            | (F.col("number_of_persons_killed") > 0)
-        ).where(F.col("the_geom").isNotNull())
-        circles = intersections.select(
-            F.col("cartodb_id").alias("__i_id"),
-            F.col("the_geom.center").alias("center"),
-            F.col("the_geom.radius_m").alias("radius_m"),
-        )
-        joined = points_in_circles(
-            filtered.select("the_geom", CHANGE_COL), circles, how="inner"
-        )
-        return joined.select(
-            F.col("g.__i_id").alias("cartodb_id"),
-            F.col(f"p.{CHANGE_COL}").alias(CHANGE_COL),
-        )
-
-    def start_rollup_stream() -> StreamingQuery:
-        return chain_rollup_stream(
-            spark,
-            TxTable(table_path, partition_by=["__ym"], retain_history=True),
-            TxTable(rollup_path),
-            ["cartodb_id"],
-            checkpoint_dir + "/rollup",
-            count_col="howmany",
-            transform=circle_transform,
-        )
-
-    return q_ingest, start_rollup_stream

@@ -1,6 +1,6 @@
 """CONTINUOUS corpus preparation: the LLM-data stack chained the way
-``continuous_nightly_chained`` chains the crash stack (r5 VERDICT
-item 6).
+``plans/continuous.py`` chains the crash stack's rollup off the fact
+table's commit log (r5 VERDICT item 6).
 
 Topology::
 

@@ -236,9 +236,10 @@ def requantize_semantic_index(
     coarse centroids on EVERYTHING ingested and rebuild the three
     state tables to exactly what a fresh full-corpus run with the new
     quantizer would produce -- the semantic analog of
-    ``rebuild_rollup`` (plans/continuous.py), repairing the geometry
-    degradation a frozen quantizer accrues under distribution shift
-    (measure it first with :func:`assignment_drift`).
+    ``rebuild_rollup`` (plans/continuous.py), which replaces the crash
+    rollup with a full recompute in one overwrite.  Here the rebuild
+    repairs the geometry degradation a frozen quantizer accrues under
+    distribution shift (measure it first with :func:`assignment_drift`).
 
     Crash-safe and idempotent per table: each overwrite carries
     ``app_txn=(app_id, rebuild_id)`` and is skipped when that table

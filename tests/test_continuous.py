@@ -1,10 +1,12 @@
 """plans/continuous.py: the reference nightly as a continuous
-incremental pipeline -- ingest->dedup->enrich->blame->reconcile->
-incremental rollup per micro-batch, against TxTable state."""
+incremental pipeline -- an ingest stream (dedup->enrich->blame->
+reconcile into the fact TxTable) and a rollup stream chained off the
+fact table's commit log."""
 
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import Row
@@ -60,28 +62,60 @@ def _feed(feed_dir, name, rows):
             f.write(json.dumps(r) + "\n")
 
 
-def test_continuous_nightly_two_batches(spark, tmp_path_factory):
+def _drain(q):
+    """Wait for an availableNow query to finish; a query still running
+    after 300 s is stopped and fails the test."""
+    if not q.awaitTermination(300):
+        q.stop()
+        pytest.fail(f"streaming query {q.id} did not drain in 300 s")
+
+
+def _pipeline(spark, root):
+    """Paths + a ``run()`` that drains both streams once, and readers
+    for the rollup and its full recompute from the fact table."""
     from nyc_crash_mapper_etl_script_spark.operators.enrichment import (
         intersection_crash_counts,
     )
     from nyc_crash_mapper_etl_script_spark.plans.continuous import (
         continuous_nightly,
-        rebuild_rollup,
     )
     from nyc_crash_mapper_etl_script_spark.sources.txtable import TxTable
 
-    root = tmp_path_factory.mktemp("continuous")
     feed = root / "feed"
     feed.mkdir()
     districts, intersections, crosswalk = _dims(spark)
-    table, rollup, ckpt = str(root / "fact"), str(root / "mv"), str(root / "ckpt")
+    table, rollup = str(root / "fact"), str(root / "mv")
 
     def run():
-        q = continuous_nightly(
-            spark, str(feed), table, rollup, ckpt,
+        q, start_rollup = continuous_nightly(
+            spark, str(feed), table, rollup, str(root / "ckpt"),
             districts, intersections, crosswalk,
         )
-        q.awaitTermination(300)
+        _drain(q)
+        _drain(start_rollup())
+
+    def counts():
+        return {r["cartodb_id"]: r["howmany"]
+                for r in TxTable(rollup).read(spark).collect()}
+
+    def full():
+        fact = TxTable(table, partition_by=["__ym"]).read(spark)
+        return {r["cartodb_id"]: r["howmany"] for r in intersection_crash_counts(
+            fact, intersections, months_window=None).collect()}
+
+    return feed, table, rollup, intersections, run, counts, full
+
+
+def test_continuous_nightly_two_batches(spark, tmp_path_factory):
+    """In-stream enrichment, serial ids and the tally merge; the
+    chained rollup equals the full recompute after inserts, a tally
+    update and a membership-changing update, and the periodic rebuild
+    agrees with it."""
+    from nyc_crash_mapper_etl_script_spark.plans.continuous import rebuild_rollup
+    from nyc_crash_mapper_etl_script_spark.sources.txtable import TxTable
+
+    feed, table, rollup, intersections, run, counts, full = _pipeline(
+        spark, tmp_path_factory.mktemp("continuous"))
 
     # batch 1: in-circle-A injury crash, geomless crash, out-of-extent
     # crash, and an in-batch duplicate of 101
@@ -104,10 +138,7 @@ def test_continuous_nightly_two_batches(spark, tmp_path_factory):
     assert got[103]["the_geom"] is None       # extent-nulled
     # serial ids assigned, dense, ordered by socrata_id
     assert [got[k]["cartodb_id"] for k in sorted(got)] == [1, 2, 3]
-
-    mv = TxTable(rollup)
-    counts = {r["cartodb_id"]: r["howmany"] for r in mv.read(spark).collect()}
-    assert counts == {1: 1}                   # only 101 is in circle A
+    assert counts() == {1: 1} == full()       # only 101 is in circle A
 
     # batch 2: new in-circle crash + a tally UPDATE to 101 (5 injured)
     _feed(feed, "b2.jsonl", [
@@ -120,68 +151,25 @@ def test_continuous_nightly_two_batches(spark, tmp_path_factory):
     assert set(got2) == {101, 102, 103, 105}
     assert got2[101]["number_of_pedestrian_injured"] == 5   # C2 merge
     assert got2[105]["cartodb_id"] == 4                      # ids continue
+    assert counts() == {1: 2} == full()       # +1 for 105
 
-    counts2 = {r["cartodb_id"]: r["howmany"] for r in mv.read(spark).collect()}
-    assert counts2 == {1: 2}                   # incremental +1 for 105
-
-    # incremental rollup == full recompute (insert-only workload)
-    full = {
-        r["cartodb_id"]: r["howmany"]
-        for r in intersection_crash_counts(
-            tx.read(spark), intersections, months_window=None
-        ).collect()
-    }
-    assert counts2 == full
-
-    # membership-changing update: flip 101 to zero injuries via the
-    # update path -- the SIGNED rollup repair keeps the view exact
-    # incrementally, no rebuild needed
+    # membership-changing update: flip 101 to zero injuries; the
+    # merge's file-level retraction keeps the view exact
     _feed(feed, "b3.jsonl", [_row(101, lat="0.5", lng="0.5", ped_inj="0")])
     run()
-    counts3 = {r["cartodb_id"]: r["howmany"] for r in mv.read(spark).collect()}
-    assert counts3 == {1: 1}                   # only 105 qualifies now
-    full3 = {
-        r["cartodb_id"]: r["howmany"]
-        for r in intersection_crash_counts(
-            tx.read(spark), intersections, months_window=None
-        ).collect()
-    }
-    assert counts3 == full3
-    # the periodic rebuild is now belt-and-braces: idempotent here
+    assert counts() == {1: 1} == full()       # only 105 qualifies now
+    # the periodic rebuild agrees with the incremental view
     rebuild_rollup(spark, table, rollup, intersections)
-    assert {
-        r["cartodb_id"]: r["howmany"] for r in mv.read(spark).collect()
-    } == counts3
+    assert counts() == {1: 1}
 
 
 def test_continuous_nightly_chained_two_streams(spark, tmp_path_factory):
-    """The DECOUPLED nightly: ingest stream writes only the fact
-    TxTable; a second stream chained off its commit log maintains the
-    rollup.  Inserts, a tally update, and a membership-changing
-    update all keep rollup == full recompute -- the coupled form's
-    exactness contract across the commit-log boundary."""
-    from nyc_crash_mapper_etl_script_spark.operators.enrichment import (
-        intersection_crash_counts,
-    )
-    from nyc_crash_mapper_etl_script_spark.plans.continuous import (
-        continuous_nightly_chained,
-    )
-    from nyc_crash_mapper_etl_script_spark.sources.txtable import TxTable
-
-    root = tmp_path_factory.mktemp("chained")
-    feed = root / "feed"
-    feed.mkdir()
-    districts, intersections, crosswalk = _dims(spark)
-    table, rollup, ckpt = str(root / "fact"), str(root / "mv"), str(root / "ck")
-
-    def run():
-        q, start_rollup = continuous_nightly_chained(
-            spark, str(feed), table, rollup, ckpt,
-            districts, intersections, crosswalk,
-        )
-        q.awaitTermination(300)
-        r = start_rollup()
-        r.awaitTermination(300)
+    """The ingest stream writes only the fact TxTable; the rollup
+    stream chained off its commit log keeps rollup == full recompute
+    across inserts, a tally update, and a membership-changing update
+    that empties a group."""
+    feed, _, _, _, run, counts, full = _pipeline(
+        spark, tmp_path_factory.mktemp("chained"))
 
     _feed(feed, "b1.jsonl", [
         _row(101, lat="0.5", lng="0.5"),
@@ -189,20 +177,6 @@ def test_continuous_nightly_chained_two_streams(spark, tmp_path_factory):
         _row(104, lat="1.5", lng="1.5"),
     ])
     run()
-    tx = TxTable(table, partition_by=["__ym"], retain_history=True)
-    mv = TxTable(rollup)
-
-    def counts():
-        return {r["cartodb_id"]: r["howmany"] for r in mv.read(spark).collect()}
-
-    def full():
-        return {
-            r["cartodb_id"]: r["howmany"]
-            for r in intersection_crash_counts(
-                tx.read(spark), intersections, months_window=None
-            ).collect()
-        }
-
     assert counts() == {1: 1, 2: 1} == full()
 
     # batch 2: insert in circle A + tally update (non-membership)
@@ -219,6 +193,37 @@ def test_continuous_nightly_chained_two_streams(spark, tmp_path_factory):
     _feed(feed, "b3.jsonl", [_row(104, lat="1.5", lng="1.5", ped_inj="0")])
     run()
     assert counts() == {1: 2} == full()
+
+
+def test_rollup_survives_a_failed_first_commit(spark, tmp_path_factory, monkeypatch):
+    """A process killed before the rollup's first commit: the re-run
+    replays the fact table's change feed into the rollup, which then
+    equals the full recompute."""
+    from pyspark.sql.streaming import StreamingQueryException
+
+    from nyc_crash_mapper_etl_script_spark.sources.txtable import TxTable
+
+    feed, _, rollup, _, run, counts, full = _pipeline(
+        spark, tmp_path_factory.mktemp("replay"))
+    commit = TxTable._commit
+    failed = []
+
+    def fail_once(self, *args, **kw):
+        if os.path.abspath(self.root) == rollup and not failed:
+            failed.append(self.root)
+            raise RuntimeError("injected rollup commit failure")
+        return commit(self, *args, **kw)
+
+    monkeypatch.setattr(TxTable, "_commit", fail_once)
+    _feed(feed, "b1.jsonl", [
+        _row(101, lat="0.5", lng="0.5"),
+        _row(104, lat="1.5", lng="1.5"),
+    ])
+    with pytest.raises(StreamingQueryException, match="injected"):
+        run()
+    assert failed and not TxTable(rollup).exists()
+    run()
+    assert counts() == {1: 1, 2: 1} == full()
 
 
 def test_constraints_gate_the_continuous_pipeline(spark, tmp_path_factory):
@@ -240,12 +245,12 @@ def test_constraints_gate_the_continuous_pipeline(spark, tmp_path_factory):
     districts, intersections, crosswalk = _dims(spark)
     table, rollup, ckpt = str(root / "fact"), str(root / "mv"), str(root / "ck")
 
-    def run():
-        q = continuous_nightly(
+    def run():  # the constraint guards the fact table: ingest only
+        q, _ = continuous_nightly(
             spark, str(feed), table, rollup, ckpt,
             districts, intersections, crosswalk,
         )
-        q.awaitTermination(300)
+        _drain(q)
 
     # good batch 1 establishes the table -- but FIRST, pin the
     # constraint into the log by pre-creating the table empty-ish:
