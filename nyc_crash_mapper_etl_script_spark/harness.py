@@ -1692,9 +1692,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    return minhash_near_duplicates(
-        d, num_perm=64, bands=16, threshold=0.5, base_hash="md5"
-    )
+    return minhash_near_duplicates(d, num_perm=64, bands=16, threshold=0.5)
 
 
 _SIMHASH_MD5_SQL = r"""
@@ -1744,7 +1742,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    return simhash_near_duplicates(d, max_hamming=6, base_hash="md5")
+    return simhash_near_duplicates(d, max_hamming=6)
 
 
 def _plane_sql(plane: list[float]) -> str:
@@ -1837,9 +1835,8 @@ def _semantic_dedup_sql(
 @register("dedup_semantic_clusters", _semantic_dedup_sql())
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (r4 VERDICT item 7): IVF
-    cluster assignment (md5-deterministic centroids, Arrow matmul --
-    the scale path; round-6-before-compare keeps it bit-identical to
-    the column path, pytest-pinned) + within-cluster keep-lowest-id
+    cluster assignment (md5-deterministic centroids, Arrow matmul with
+    round-6-before-compare) + within-cluster keep-lowest-id
     cosine pruning with the candidate cap wired
     (``semantic_dedup``, operators/similarity.py) -- the semantic
     family the hash/shingle rows don't cover.  The DuckDB twin
@@ -1853,8 +1850,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         e,
         n_cells=8,
         threshold=0.4,
-        impl="arrow",
-        hash_fn="md5",
         max_cluster=64,
     )
 
@@ -1963,11 +1958,9 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = _SEM_SPLIT
     old = e.where(F.col("vec_id") < split).select("vec_id", "embedding")
     new = e.where(F.col("vec_id") >= split).select("vec_id", "embedding")
-    cents = select_centroids(old, 8, hash_fn="md5")
-    index = ivf_assign(old, cents, impl="arrow")
-    return semantic_dedup_incremental(
-        new, index, cents, threshold=0.4, impl="arrow", max_cluster=64
-    )
+    cents = select_centroids(old, 8)
+    index = ivf_assign(old, cents)
+    return semantic_dedup_incremental(new, index, cents, threshold=0.4, max_cluster=64)
 
 
 def _semantic_quality_sql(
@@ -2031,11 +2024,9 @@ def dedup_semantic_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    kept_full = semantic_dedup(
-        e, n_cells=8, threshold=0.4, impl="arrow", hash_fn="md5"
-    ).select("vec_id")
+    kept_full = semantic_dedup(e, n_cells=8, threshold=0.4).select("vec_id")
     kept_cap = semantic_dedup(
-        e, n_cells=8, threshold=0.4, impl="arrow", hash_fn="md5", max_cluster=16
+        e, n_cells=8, threshold=0.4, max_cluster=16
     ).select("vec_id")
     ids = e.select("vec_id")
     # each drop set is consumed twice (own count + overlap); the lazy
@@ -2114,8 +2105,8 @@ def semantic_assignment_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     old = e.where(F.col("vec_id") < _SEM_SPLIT)
-    cents = select_centroids(old, 8, hash_fn="md5")
-    assigned = ivf_assign(e, cents, impl="arrow")
+    cents = select_centroids(old, 8)
+    assigned = ivf_assign(e, cents)
     withcos = assigned.join(F.broadcast(cents), "cell_id").select(
         "vec_id",
         F.round(
@@ -2223,20 +2214,20 @@ def dedup_semantic_stream_divergence(
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     old = e.where(F.col("vec_id") < _SEM_SPLIT)
     new = e.where(F.col("vec_id") >= _SEM_SPLIT)
-    cents = select_centroids(old, 8, hash_fn="md5")
+    cents = select_centroids(old, 8)
     kept_b1 = semantic_dedup(
-        old, threshold=0.4, impl="arrow", max_cluster=12, centroids=cents
+        old, threshold=0.4, max_cluster=12, centroids=cents
     ).select("vec_id")
-    index = ivf_assign(old, cents, impl="arrow")
+    index = ivf_assign(old, cents)
     kept_b2 = semantic_dedup_incremental(
-        new, index, cents, threshold=0.4, impl="arrow", max_cluster=12
+        new, index, cents, threshold=0.4, max_cluster=12
     ).select("vec_id")
     # three consumers each (count + both anti-join directions): the
     # lazy localCheckpoints materialize each keep set once instead of
     # re-running its prune pipeline per consumer (narrow vec_id rows)
     kept_stream = kept_b1.unionByName(kept_b2).localCheckpoint(eager=False)
     kept_once = semantic_dedup(
-        e, threshold=0.4, impl="arrow", max_cluster=12, centroids=cents
+        e, threshold=0.4, max_cluster=12, centroids=cents
     ).select("vec_id").localCheckpoint(eager=False)
     ns = kept_stream.agg(F.count(F.lit(1)).cast("long").alias("n_kept_stream"))
     no = kept_once.agg(F.count(F.lit(1)).cast("long").alias("n_kept_oneshot"))
@@ -2555,7 +2546,7 @@ def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="ivf_index_")
     try:
         path = base + "/index"
-        ivf_write(e, path, n_cells=8, hash_fn="md5")
+        ivf_write(e, path, n_cells=8)
         rows = ivf_probe(spark, path, q, k=5, n_probe=2).collect()
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -2567,21 +2558,19 @@ def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("sim_ivf_topk", _ivf_topk_sql())
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-k: nearest-centroid cells probed via EQUI join
-    (hash join touching n_probe/n_cells of the corpus).  This
-    registration uses the md5 centroid order; the Arrow matmul
-    assignment compares round-6 cosines, so the DuckDB twin replays
-    cell selection, assignment, probes, and ranking exactly (the
-    literal-centroid ``assign_impl="column"`` path is the
-    bit-identical fallback, pinned equal in tests); full-probe
-    equivalence to brute force stays pinned in
-    tests/test_dedup_similarity.py."""
+    (hash join touching n_probe/n_cells of the corpus).  Centroids
+    come in md5 order and the Arrow matmul assignment compares
+    round-6 cosines, so the DuckDB twin replays cell selection,
+    assignment, probes, and ranking exactly -- this row is the check
+    on the assignment; full-probe equivalence to brute force stays
+    pinned in tests/test_dedup_similarity.py."""
     from nyc_crash_mapper_etl_script_spark.operators.similarity import ivf_topk
 
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    return ivf_topk(e, q, k=5, n_cells=8, n_probe=2, hash_fn="md5")
+    return ivf_topk(e, q, k=5, n_cells=8, n_probe=2)
 
 
 def _multimodal_features_sql(n_features: int = 8) -> str:
@@ -3198,7 +3187,7 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT source,
            count(*) AS n_docs,
-           sum(ntok) AS n_tokens,
+           CAST(sum(ntok) AS BIGINT) AS n_tokens,
            CAST(floor(sum(CAST(round(q * 10000) AS BIGINT)) / count(*)) AS BIGINT)
              AS avg_q_e4
     FROM dedup
@@ -4181,12 +4170,8 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    index = minhash_banded_rows(
-        d.where(F.col("doc_id") % 2 == 0), base_hash="md5"
-    )
-    new = minhash_banded_rows(
-        d.where(F.col("doc_id") % 2 == 1), base_hash="md5"
-    )
+    index = minhash_banded_rows(d.where(F.col("doc_id") % 2 == 0))
+    new = minhash_banded_rows(d.where(F.col("doc_id") % 2 == 1))
     return minhash_dedup_incremental(new, index, num_perm=64, threshold=0.5)
 
 
@@ -4453,7 +4438,6 @@ def dedup_stream_vs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_perm=64,
             bands=16,
             threshold=0.5,
-            base_hash="md5",
         )
         drain(q, 600)
         q.stop()
@@ -5426,10 +5410,10 @@ def a13_argmax_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txtable_stream_rollup",
     """
     SELECT o_orderstatus, count(*) AS n,
-           sum(CAST(round(CASE WHEN o_orderkey % 10 = 0
-                               THEN o_totalprice * 2
-                               ELSE o_totalprice END * 100) AS BIGINT))
-             AS total_cents
+           CAST(sum(CAST(round(CASE WHEN o_orderkey % 10 = 0
+                                    THEN o_totalprice * 2
+                                    ELSE o_totalprice END * 100) AS BIGINT))
+                AS BIGINT) AS total_cents
     FROM orders
     WHERE o_orderkey % 7 <> 0
     GROUP BY o_orderstatus
@@ -6216,7 +6200,7 @@ def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair pipeline into both consumers (r12: plan 137 -> 57 nodes,
     # probe mins 1.88 -> 1.17 s at sf0.1)
     lsh = minhash_near_duplicates(
-        d, num_perm=64, bands=16, threshold=0.5, base_hash="md5"
+        d, num_perm=64, bands=16, threshold=0.5
     ).select("id_a", "id_b").localCheckpoint(eager=False)
     exact = ngram_jaccard_pairs(d, k=5, threshold=0.5).select(
         "id_a", "id_b"
@@ -6251,11 +6235,11 @@ def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txtable_merge_update",
     """
     SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
-           sum(CAST(round(CASE WHEN o_orderkey % 5 = 0
-                               AND o_orderpriority LIKE '1%'
-                               THEN o_totalprice * 2
-                               ELSE o_totalprice END * 100) AS BIGINT))
-             AS total_cents
+           CAST(sum(CAST(round(CASE WHEN o_orderkey % 5 = 0
+                                    AND o_orderpriority LIKE '1%'
+                                    THEN o_totalprice * 2
+                                    ELSE o_totalprice END * 100) AS BIGINT))
+                AS BIGINT) AS total_cents
     FROM orders
     GROUP BY o_orderstatus
     ORDER BY o_orderstatus

@@ -9,19 +9,21 @@ training-data-pipeline case:
    verified by signature agreement.  This is the scale path: cost is
    O(docs x bands) rows shuffled, never O(docs^2).  The signature
    itself is an Arrow-batched pandas UDF (numpy affine permutations
-   over one 64-bit base hash per shingle) -- the pure-Column form is
-   kept as ``minhash_signature`` but Spark evaluates nested
-   higher-order array functions interpretively, measured ~20x slower
-   than the vectorized path at 64 perms.
+   over one 64-bit base hash per shingle); a pure-Column form was
+   measured ~20x slower at 64 perms, because Spark evaluates nested
+   higher-order array functions interpretively.
  - simhash: 64-bit sign-sum fingerprint + pigeonhole band blocking
    for hamming-distance candidates.
  - ngram_jaccard: exact jaccard over shingle sets for candidate pairs
    discovered via a shingle inverted index (the verify-stage oracle;
    quadratic only within a shared shingle's posting list).
 
-All hashing is deterministic across runs/executors (Spark xxhash64
-JVM-side; blake2b + seeded affine coefficients in the Arrow path --
-never Python's seed-randomized ``hash()``).
+All hashing is deterministic across runs/executors: minhash and
+simhash share one base hash, the first 8 bytes of md5 (``_md5_u64``,
+bit-for-bit DuckDB's ``md5_number_upper``), with seeded 32-bit affine
+coefficients (``perm_coeffs_md5``) for the minhash permutations, so
+every signature is replayable in the SQL oracle; LSH band keys are
+Spark xxhash64.  Never Python's seed-randomized ``hash()``.
 """
 
 from __future__ import annotations
@@ -43,52 +45,6 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
         docs.groupBy(F.md5(F.col(text_col)).alias("fp"))
         .agg(F.min(id_col).alias("keeper"), F.count("*").alias("n"))
     )
-
-
-_LONG_MAX = (1 << 63) - 1
-
-
-def minhash_signature(text: Column, num_perm: int = 64, k: int = 5) -> Column:
-    """MinHash signature as an ``array<bigint>`` of length num_perm.
-
-    h_p(doc) = min over shingles of xxhash64(shingle, p) (the tuple
-    hash is the permutation family).  ONE aggregate pass over the
-    shingle array accumulating all num_perm minima -- the naive
-    per-permutation ``array_min(transform(...))`` form re-evaluates
-    the shingle construction num_perm times (measured 60x slower).
-    Stays in codegen: no explode, no shuffle.  Empty docs get an
-    all-NULL signature.
-    """
-    sh = shingles(text, k=k)
-    perm_idx = F.sequence(F.lit(0), F.lit(num_perm - 1))
-    sig = F.aggregate(
-        sh,
-        F.array_repeat(F.lit(_LONG_MAX).cast("long"), num_perm),
-        lambda acc, s: F.zip_with(
-            acc,
-            F.transform(perm_idx, lambda p: F.xxhash64(s, p)),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-    # empty shingle set -> NULL signature (array_min semantics of the
-    # naive form), detected by the untouched sentinel
-    return F.when(F.size(sh) > 0, sig)
-
-
-def _perm_coeffs(num_perm: int, seed: int = 42):
-    """Deterministic affine-permutation coefficients (odd multiplier,
-    arbitrary offset) from the same LCG family as the LSH
-    hyperplanes."""
-    import numpy as np
-
-    state = seed & 0x7FFFFFFF
-    a, b = [], []
-    for _ in range(num_perm):
-        state = (1103515245 * state + 12345) % (1 << 31)
-        a.append(((state << 33) | (state << 2) | 1) & ((1 << 64) - 1))
-        state = (1103515245 * state + 12345) % (1 << 31)
-        b.append((state << 32) | state)
-    return np.array(a, dtype=np.uint64), np.array(b, dtype=np.uint64)
 
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -126,36 +82,23 @@ def _md5_u64(s: str) -> int:
     return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "little")
 
 
-def minhash_signature_arrow(
-    num_perm: int = 64, k: int = 5, seed: int = 42, base_hash: str = "blake2b"
-):
+def minhash_signature_arrow(num_perm: int = 64, k: int = 5, seed: int = 42):
     """Vectorized minhash signature: returns a pandas_udf usable as
     ``mh(col)``.
 
     Per Arrow batch: shingle each doc in Python (same normalization
     and word-k-shingle semantics as :func:`functions.text.shingles`),
-    one 64-bit base hash per distinct shingle (blake2b by default;
-    ``base_hash="md5"`` uses the DuckDB-reproducible ``_md5_u64``
-    family with SQL-safe 32-bit multipliers), then all num_perm
-    minima in a single numpy (num_perm x n_shingles) affine pass with
-    uint64 wraparound.  Deterministic across executors."""
-    import hashlib
-
+    one DuckDB-reproducible ``_md5_u64`` base hash per distinct
+    shingle, then all num_perm minima in a single numpy
+    (num_perm x n_shingles) affine pass over the SQL-safe
+    ``perm_coeffs_md5`` coefficients with uint64 wraparound.
+    Deterministic across executors."""
     import numpy as np
     from pyspark.sql import types as T
 
-    if base_hash == "md5":
-        a_l, b_l = perm_coeffs_md5(num_perm, seed)
-        A = np.array(a_l, dtype=np.uint64)
-        B = np.array(b_l, dtype=np.uint64)
-        hfn = _md5_u64
-    else:
-        A, B = _perm_coeffs(num_perm, seed)
-
-        def hfn(s: str) -> int:
-            return int.from_bytes(
-                hashlib.blake2b(s.encode(), digest_size=8).digest(), "big"
-            )
+    a_l, b_l = perm_coeffs_md5(num_perm, seed)
+    A = np.array(a_l, dtype=np.uint64)
+    B = np.array(b_l, dtype=np.uint64)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def mh(texts: pd.Series) -> pd.Series:
@@ -185,7 +128,7 @@ def minhash_signature_arrow(
                 idxs[j] = v
             doc_idxs.append(idxs)
         base_all = np.fromiter(
-            (hfn(s) for s in vocab), dtype=np.uint64, count=len(vocab)
+            (_md5_u64(s) for s in vocab), dtype=np.uint64, count=len(vocab)
         )
         out = []
         for idxs in doc_idxs:
@@ -236,16 +179,13 @@ def minhash_near_duplicates(
     bands: int = 16,
     threshold: float = 0.7,
     k: int = 5,
-    impl: str = "arrow",
-    base_hash: str = "blake2b",
     seed: int = 42,
     max_bucket: int = 256,
 ) -> DataFrame:
     """Near-duplicate pairs (a < b) whose estimated Jaccard (minhash
     signature agreement) >= threshold.
 
-    Plan: signature projection (no shuffle; Arrow-vectorized by
-    default, ``impl="column"`` for the pure-JVM form) -> explode band
+    Plan: Arrow-vectorized signature projection (no shuffle) -> explode band
     keys (x bands) -> ONE explicit repartition on (band, bucket) that
     every downstream branch reuses -> per-bucket posting list (sorted
     by id, so emitted pairs are id-ordered) -> in-bucket pair
@@ -278,10 +218,7 @@ def minhash_near_duplicates(
     # stage inherits the parallelism.  (A 100 TB corpus already has
     # thousands of scan partitions -- the guard is a no-op there.)
     docs = _ensure_parallelism(docs)
-    if impl == "arrow":
-        sig_col = minhash_signature_arrow(num_perm, k, seed, base_hash)(F.col(text_col))
-    else:
-        sig_col = minhash_signature(F.col(text_col), num_perm, k)
+    sig_col = minhash_signature_arrow(num_perm, k, seed)(F.col(text_col))
     # size-aware shared materialization: the signature projection (the
     # expensive Python/Arrow pass) is materialized ONCE at first
     # action and every downstream branch -- bucket census, small-
@@ -427,64 +364,15 @@ def duplicate_clusters(
     return labels.select(F.col("id").alias(id_col), F.col("lbl").alias("cluster"))
 
 
-#: signed-long bit weights (bit 63 is the sign bit)
-_BIT_WEIGHTS = [1 << b for b in range(63)] + [-(1 << 63)]
-
-
-def simhash64(text: Column, k: int = 1) -> Column:
-    """64-bit SimHash over word k-shingles: bit b of the fingerprint
-    is set when the sum over tokens of (+1 if bit b of
-    xxhash64(token) else -1) is positive.
-
-    One pass over the token array accumulating a 64-counter vector
-    (zip_with inside aggregate -- pure codegen), then folded into a
-    signed long."""
-    sh = shingles(text, k=k)
-    bit_idx = F.sequence(F.lit(0), F.lit(63))
-    counts = F.aggregate(
-        sh,
-        F.array_repeat(F.lit(0).cast("int"), 64),
-        lambda acc, tok: F.zip_with(
-            acc,
-            F.transform(
-                bit_idx,
-                lambda b: F.getbit(F.xxhash64(tok), b).cast("int") * F.lit(2) - F.lit(1),
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    weights = F.array(*[F.lit(w).cast("long") for w in _BIT_WEIGHTS])
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            weights,
-            lambda c, w: F.when(c > 0, w).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
-def simhash64_arrow(k: int = 1, base_hash: str = "blake2b"):
-    """Vectorized SimHash: one 64-bit base hash per shingle
-    (duplicates kept -- repeated shingles weight the bit counts, as in
-    the Column form; ``base_hash="md5"`` swaps in the
-    DuckDB-reproducible ``_md5_u64``), bit unpack + sign-sum in
-    numpy.  Returns a pandas_udf usable as ``sh(col)``; empty docs
+def simhash64_arrow(k: int = 1):
+    """Vectorized 64-bit SimHash over word k-shingles: bit b of the
+    fingerprint is set when the sum over shingles of (+1 if bit b of
+    ``_md5_u64(shingle)`` else -1) is positive.  Duplicates are kept
+    (repeated shingles weight the bit counts); bit unpack + sign-sum
+    in numpy.  Returns a pandas_udf usable as ``sh(col)``; empty docs
     fingerprint to 0."""
-    import hashlib
-
     import numpy as np
     from pyspark.sql import types as T
-
-    if base_hash == "md5":
-        hfn = _md5_u64
-    else:
-
-        def hfn(s: str) -> int:
-            return int.from_bytes(
-                hashlib.blake2b(s.encode(), digest_size=8).digest(), "big"
-            )
 
     shifts = None  # built lazily per executor
 
@@ -516,7 +404,7 @@ def simhash64_arrow(k: int = 1, base_hash: str = "blake2b"):
                 idxs[j] = v
             doc_idxs.append(idxs)
         base_all = np.fromiter(
-            (hfn(s) for s in vocab), dtype=np.uint64, count=len(vocab)
+            (_md5_u64(s) for s in vocab), dtype=np.uint64, count=len(vocab)
         )
         out = []
         for idxs in doc_idxs:
@@ -544,8 +432,6 @@ def simhash_near_duplicates(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    impl: str = "arrow",
-    base_hash: str = "blake2b",
 ) -> DataFrame:
     """Pairs with hamming(simhash) <= max_hamming via pigeonhole
     blocking.
@@ -565,10 +451,7 @@ def simhash_near_duplicates(
     input (all those pairs ARE within distance 0), but no single
     allocation is."""
     docs = _ensure_parallelism(docs)  # single-file inputs: spread the UDF
-    if impl == "arrow":
-        sig_col = simhash64_arrow(base_hash=base_hash)(F.col(text_col))
-    else:
-        sig_col = simhash64(F.col(text_col))
+    sig_col = simhash64_arrow()(F.col(text_col))
     n_chunks = min(max_hamming + 1, 64)
     # distribute 64 bits as evenly as possible -> exactly n_chunks
     # non-empty chunks, so the pigeonhole guarantee holds
@@ -876,8 +759,6 @@ def minhash_banded_rows(
     num_perm: int = 64,
     bands: int = 16,
     k: int = 5,
-    impl: str = "arrow",
-    base_hash: str = "blake2b",
     seed: int = 42,
 ) -> DataFrame:
     """The LSH *index rows* for a batch of docs: (id, sig, bk) with
@@ -887,12 +768,7 @@ def minhash_banded_rows(
     """
     rows_per_band = num_perm // bands
     docs = _ensure_parallelism(docs)  # single-file inputs: spread the UDF
-    if impl == "arrow":
-        sig_col = minhash_signature_arrow(num_perm, k, seed, base_hash)(
-            F.col(text_col)
-        )
-    else:
-        sig_col = minhash_signature(F.col(text_col), num_perm, k)
+    sig_col = minhash_signature_arrow(num_perm, k, seed)(F.col(text_col))
     sigs = (
         docs.select(F.col(id_col).alias("id"), sig_col.alias("sig"))
         .localCheckpoint(eager=False)

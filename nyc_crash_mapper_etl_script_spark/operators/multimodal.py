@@ -201,7 +201,7 @@ RESIZED_SCHEMA = T.StructType(
 
 
 def resize_stub(payload: bytes, w: int, h: int, strict: bool = False) -> bytes:
-    """STUB for image resize (real impl: PIL/libvips, not in this
+    """STUB for image resize (real implementation: PIL/libvips, not in this
     container).  Deterministic fake: tag the payload with the target
     box so downstream steps see a changed, reproducible blob."""
     if strict:

@@ -37,8 +37,6 @@ the training-data-pipeline extension surface.
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 -- resolves pandas_udf type hints
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -159,44 +157,13 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> DataFrame:
-    """(id, codes array<int>, 1-based) for every vector.
-
-    ``impl="expr"``: pure Column arithmetic -- codegen'd, SQL-twin
-    replayable.  ``impl="arrow"``: one vectorized pandas_udf doing the
-    distance matrix per Arrow batch -- same codes (round-6 + first-min
-    matches the expr path), preferred when ``m * ksub`` is large
-    enough that the unrolled expression tree gets unwieldy (e.g.
-    ksub=256).  Both are one narrow projection: no shuffle, no join --
-    encoding 100 TB is embarrassingly parallel scan work."""
+    """(id, codes array<int>, 1-based) for every vector: pure Column
+    arithmetic (round-6 scores, first-min code), codegen'd and
+    replayable as its SQL twin.  One narrow projection: no shuffle, no
+    join -- encoding 100 TB is embarrassingly parallel scan work."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    if impl == "expr":
-        codes = F.array(*_encode_exprs(v, codebooks))
-    elif impl == "arrow":
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
-
-        m = len(codebooks)
-        dsub = len(codebooks[0][0])
-        B = np.array(codebooks, dtype=np.float64)  # (m, ksub, dsub)
-        cc = (B * B).sum(axis=2)  # (m, ksub)
-
-        @pandas_udf("array<int>")
-        def _enc(vecs: pd.Series) -> pd.Series:
-            X = np.array(vecs.tolist(), dtype=np.float64)  # (n, d)
-            S = X.reshape(len(X), m, dsub)  # (n, m, dsub)
-            # scores[n, m, ksub] = -2 * S . B^T + cc  (same formula as
-            # the expr path; round-6 absorbs summation-order ULPs)
-            scores = np.round(
-                -2.0 * np.einsum("nmd,mkd->nmk", S, B) + cc[None, :, :], 6
-            )
-            codes = scores.argmin(axis=2) + 1  # first min, 1-based
-            return pd.Series([row.astype("int32").tolist() for row in codes])
-
-        codes = _enc(v.cast("array<double>"))
-    else:
-        raise ValueError(f"unknown impl {impl!r}")
+    codes = F.array(*_encode_exprs(v, codebooks))
     return df.select(F.col(id_col), codes.alias("codes"))
 
 
@@ -210,7 +177,6 @@ def pq_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "qv",
-    impl: str = "expr",
 ) -> DataFrame:
     """Two-stage PQ-ADC ANN.
 
@@ -229,7 +195,7 @@ def pq_topk(
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     corpus = ensure_parallelism(corpus)  # single-file corpora: spread the scan
-    codes = pq_encode(corpus, codebooks, id_col, vec_col, impl=impl)
+    codes = pq_encode(corpus, codebooks, id_col, vec_col)
 
     qv = F.transform(F.col(query_vec_col), lambda x: x.cast("double"))
     lut_cols = []

@@ -195,24 +195,25 @@ def embedding_near_duplicates(
     )
 
 
+def _md5_order(id_col: str) -> Column:
+    """The one centroid-sampling order: md5 hex of the id as a string,
+    the form DuckDB's ``md5(CAST(id AS VARCHAR))`` reproduces."""
+    return F.md5(F.col(id_col).cast("string"))
+
+
 def select_centroids(
     corpus: DataFrame,
     n_cells: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic IVF coarse quantizer: n_cells corpus vectors
-    chosen by hash order (a seeded spread sample -- the k-means step
-    of classical IVF traded for reproducibility; at 100 TB train
-    k-means on a sample and broadcast the result the same way).
-    ``hash_fn="md5"`` orders by the md5 hex string of the id instead
-    -- same spread, but expressible 1:1 in the DuckDB oracle twin.
+    chosen by the md5 hex string of the id (a seeded spread sample --
+    the k-means step of classical IVF traded for reproducibility; at
+    100 TB train k-means on a sample and broadcast the result the same
+    way).  The order is expressible 1:1 in the DuckDB oracle twin.
     Returns (cell_id, cv)."""
-    if hash_fn == "md5":
-        hcol = F.md5(F.col(id_col).cast("string"))
-    else:
-        hcol = F.xxhash64(F.col(id_col))
+    hcol = _md5_order(id_col)
     # number the <= n_cells winners without a global window (which
     # would carry a "no partition defined" hazard marker even though
     # the input is provably tiny): fold them into ONE sorted array and
@@ -237,10 +238,9 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     sample_size: int = 4096,
     iters: int = 10,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """IVF coarse quantizer refined by spherical k-means: Lloyd
-    iterations over a DETERMINISTIC hash-ordered sample (never a
+    iterations over a DETERMINISTIC md5-ordered sample (never a
     random() -- same centroids every run, every cluster layout),
     initialized from :func:`select_centroids`' seeds.
 
@@ -254,12 +254,8 @@ def kmeans_centroids(
     centroid -- both rules keep the result platform-independent."""
     import numpy as np
 
-    if hash_fn == "md5":
-        hcol = F.md5(F.col(id_col).cast("string"))
-    else:
-        hcol = F.xxhash64(F.col(id_col))
     sample_rows = (
-        corpus.orderBy(hcol, F.col(id_col))
+        corpus.orderBy(_md5_order(id_col), F.col(id_col))
         .limit(sample_size)
         .select(F.col(vec_col).alias("v"))
         .collect()
@@ -267,7 +263,7 @@ def kmeans_centroids(
     X = np.array([list(r["v"]) for r in sample_rows], dtype=np.float64)
     Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
     seed_rows = select_centroids(
-        corpus, n_cells, id_col, vec_col, hash_fn=hash_fn
+        corpus, n_cells, id_col, vec_col
     ).orderBy("cell_id").collect()
     C = np.array([list(r["cv"]) for r in seed_rows], dtype=np.float64)
     C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
@@ -297,7 +293,6 @@ def _centroid_rows(
     n_cells: int,
     id_col: str,
     vec_col: str,
-    hash_fn: str = "xxhash64",
     centroid_impl: str = "hash",
 ):
     """Collected quantizer rows, memoized on the corpus plan
@@ -308,15 +303,15 @@ def _centroid_rows(
 
     def compute():
         if centroid_impl == "kmeans":
-            cents = kmeans_centroids(corpus, n_cells, id_col, vec_col, hash_fn=hash_fn)
+            cents = kmeans_centroids(corpus, n_cells, id_col, vec_col)
         else:
-            cents = select_centroids(corpus, n_cells, id_col, vec_col, hash_fn=hash_fn)
+            cents = select_centroids(corpus, n_cells, id_col, vec_col)
         return cents.orderBy("cell_id").collect()
 
     return memo(
         corpus,
         "ivf_centroids",
-        (n_cells, id_col, vec_col, hash_fn, centroid_impl),
+        (n_cells, id_col, vec_col, centroid_impl),
         compute,
     )
 
@@ -326,7 +321,6 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Assign every corpus vector to its nearest centroid (argmax
     cosine, ties to the smallest cell_id) as a pure MAP: the centroid
@@ -338,18 +332,14 @@ def ivf_assign(
     exact pattern that dies at 100 TB.  Write the result partitioned/
     bucketed by ``cell_id`` so probes become partition-pruned scans.
 
-    ``impl="column"`` inlines the centroids as literal arrays into a
-    single codegen projection (still zero shuffles, still one map).
-    Its sequential-accumulation cosine is bit-identical to DuckDB's
-    ``list_dot_product`` form, which makes it the oracle-parity path;
-    the argmax compares cosines rounded at 6 so both engines break
-    the same near-ties by smallest cell_id.  The Arrow matmul stays
-    the scale path: at thousands of cells a literal expression per
-    centroid stops being reasonable, a (batch x dim) @ (dim x cells)
-    matmul does not.
+    The argmax compares cosines rounded at 6, so matmul summation-order
+    noise cannot flip an assignment and the DuckDB twins (which break
+    the same near-ties by smallest cell_id) agree row for row; the
+    ``sim_ivf_topk``, ``dedup_semantic_*`` and incremental registry
+    rows check exactly that.
     """
     rows = centroids.orderBy("cell_id").collect()
-    return _assign_from_rows(corpus, rows, id_col, vec_col, impl=impl)
+    return _assign_from_rows(corpus, rows, id_col, vec_col)
 
 
 def _assign_from_rows(
@@ -357,7 +347,6 @@ def _assign_from_rows(
     rows,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """:func:`ivf_assign` body over already-collected centroid rows --
     lets callers that train the quantizer once (ivf_topk) share the
@@ -366,29 +355,6 @@ def _assign_from_rows(
     import numpy as np
     from pyspark.sql import types as T
 
-    if impl == "column":
-        structs = [
-            F.struct(
-                F.coalesce(
-                    -F.round(
-                        cosine(
-                            F.col(vec_col),
-                            F.array(*[F.lit(float(x)) for x in r["cv"]]),
-                        ),
-                        6,
-                    ),
-                    F.lit(float("inf")),
-                ).alias("negsim"),
-                F.lit(int(r["cell_id"])).cast("int").alias("cell_id"),
-            )
-            for r in rows
-        ]
-        best = F.element_at(F.array_sort(F.array(*structs)), 1)
-        return corpus.select(
-            F.col(id_col).alias(id_col),
-            F.col(vec_col).alias(vec_col),
-            best["cell_id"].alias("cell_id"),
-        )
     C = np.array([list(r["cv"]) for r in rows], dtype=np.float64)
     Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
     cell_ids = np.array([r["cell_id"] for r in rows], dtype=np.int32)
@@ -401,8 +367,8 @@ def _assign_from_rows(
         )
         norms = np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
         # round-6 before argmax: the same compare-rounded contract as
-        # the column impl / SQL twin, so matmul summation-order noise
-        # (~1e-15) cannot flip an assignment between engines
+        # the SQL twin, so matmul summation-order noise (~1e-15)
+        # cannot flip an assignment between engines
         sims = np.round((M / norms) @ Cn.T, 6)
         # argmax returns the FIRST max -> ties break to smallest cell
         return pd.Series(cell_ids[np.argmax(sims, axis=1)])
@@ -429,8 +395,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "qv",
-    hash_fn: str = "xxhash64",
-    assign_impl: str = "arrow",
     centroid_impl: str = "hash",
 ) -> DataFrame:
     """IVF approximate top-k: score only the corpus cells whose
@@ -440,8 +404,9 @@ def ivf_topk(
     n_probe/n_cells of the corpus -- unlike brute force's full cross
     join.  ``n_probe == n_cells`` degrades gracefully to exact
     search (recall 1.0), which the tests pin.  All rankings compare
-    cosines rounded at 6 with deterministic id tie-breaks, so the
-    md5/column configuration is reproducible 1:1 in ANSI SQL.
+    cosines rounded at 6 with deterministic id tie-breaks, and the
+    centroids come in md5 order, so the default quantizer is
+    reproducible 1:1 in ANSI SQL (the ``sim_ivf_topk`` row).
     ``centroid_impl="kmeans"`` swaps in sample-trained spherical
     k-means centroids (better recall per probe; still deterministic,
     no longer SQL-twinnable).
@@ -455,11 +420,9 @@ def ivf_topk(
     collect_list -- was recomputed inside the probe branch of every
     execution, which is exactly the r2 bench regression.)"""
     rows = _centroid_rows(
-        corpus, n_cells, id_col, vec_col, hash_fn=hash_fn, centroid_impl=centroid_impl
+        corpus, n_cells, id_col, vec_col, centroid_impl=centroid_impl
     )
-    assigned = _assign_from_rows(
-        ensure_parallelism(corpus), rows, id_col, vec_col, impl=assign_impl
-    )
+    assigned = _assign_from_rows(ensure_parallelism(corpus), rows, id_col, vec_col)
     probes = _probe_cells_from_rows(
         queries, rows, n_probe, query_id_col, query_vec_col
     )
@@ -588,8 +551,6 @@ def ivf_write(
     n_cells: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    hash_fn: str = "xxhash64",
-    assign_impl: str = "arrow",
     centroid_impl: str = "hash",
 ) -> None:
     """Materialize an IVF index: corpus partitioned on disk by
@@ -604,10 +565,10 @@ def ivf_write(
     in tests).  ``centroid_impl="kmeans"`` trains the quantizer on a
     deterministic sample before writing."""
     if centroid_impl == "kmeans":
-        cents = kmeans_centroids(corpus, n_cells, id_col, vec_col, hash_fn=hash_fn)
+        cents = kmeans_centroids(corpus, n_cells, id_col, vec_col)
     else:
-        cents = select_centroids(corpus, n_cells, id_col, vec_col, hash_fn=hash_fn)
-    assigned = ivf_assign(corpus, cents, id_col, vec_col, impl=assign_impl)
+        cents = select_centroids(corpus, n_cells, id_col, vec_col)
+    assigned = ivf_assign(corpus, cents, id_col, vec_col)
     assigned.write.mode("overwrite").partitionBy("cell_id").parquet(path)
     cents.write.mode("overwrite").parquet(path.rstrip("/") + "/_centroids")
 
@@ -729,7 +690,6 @@ def ivf_append(
     new_vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_impl: str = "arrow",
 ) -> None:
     """Incrementally grow a materialized IVF index: assign only the
     NEW vectors against the STORED centroids and append them into
@@ -738,7 +698,7 @@ def ivf_append(
     increment: O(increment) work, quantizer unchanged (retrain with
     :func:`ivf_write` when drift accumulates)."""
     cents = spark.read.parquet(path.rstrip("/") + "/_centroids")
-    assigned = ivf_assign(new_vectors, cents, id_col, vec_col, impl=assign_impl)
+    assigned = ivf_assign(new_vectors, cents, id_col, vec_col)
     assigned.write.mode("append").partitionBy("cell_id").parquet(path)
 
 
@@ -810,8 +770,6 @@ def semantic_dedup(
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
-    hash_fn: str = "xxhash64",
     max_cluster: int | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
@@ -838,16 +796,16 @@ def semantic_dedup(
     PRUNABLE against in-cap candidates but no longer prune others
     (bounded recall loss, never wrong keeps of in-cap candidates).
 
-    ``impl='column'`` + ``hash_fn='md5'`` is the oracle-parity
-    configuration (round-6 cosines, DuckDB-replayable); Arrow is the
-    scale path.  ``centroids=`` accepts a pre-trained quantizer
-    (e.g. ``kmeans_centroids``); cell numbering is whatever the
-    quantizer produced."""
+    Round-6 cosines and md5-ordered centroids make the result
+    DuckDB-replayable (the ``dedup_semantic_*`` rows).
+    ``centroids=`` accepts a pre-trained quantizer (e.g.
+    ``kmeans_centroids``); cell numbering is whatever the quantizer
+    produced."""
     if centroids is None:
         # memoized on the corpus plan (plancache), like every IVF
         # caller: re-declaring the dedup does not re-run the
         # quantizer job
-        rows = _centroid_rows(corpus, n_cells, id_col, vec_col, hash_fn=hash_fn)
+        rows = _centroid_rows(corpus, n_cells, id_col, vec_col)
     else:
         rows = centroids.orderBy("cell_id").collect()
     # per-ROW norm precompute: the pair predicate then needs ONE
@@ -862,7 +820,7 @@ def semantic_dedup(
     # relation carries the embedding vectors (corpus-sized, wide), so
     # DISK_ONLY past the input-bytes bound.
     assigned = share_corpus_subtree(
-        _assign_from_rows(corpus, rows, id_col, vec_col, impl=impl)
+        _assign_from_rows(corpus, rows, id_col, vec_col)
         .withColumn("__nrm", vnorm(F.col(vec_col)))
     )
     return _semantic_prune(assigned, assigned, threshold, id_col, vec_col, max_cluster)
@@ -892,9 +850,7 @@ def _semantic_prune(
             pool.withColumn(
                 "__w",
                 F.row_number().over(
-                    W.partitionBy("cell_id").orderBy(
-                        F.md5(F.col(id_col).cast("string")), F.col(id_col)
-                    )
+                    W.partitionBy("cell_id").orderBy(_md5_order(id_col), F.col(id_col))
                 ),
             )
             .where(F.col("__w") <= max_cluster)
@@ -930,7 +886,6 @@ def semantic_dedup_incremental(
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
     max_cluster: int | None = None,
 ) -> DataFrame:
     """Incremental SemDeDup for continuous corpus ingest: dedup a NEW
@@ -972,7 +927,7 @@ def semantic_dedup_incremental(
     # the pool union -- without it the batch's Arrow matmul runs twice
     # per action.  Batch-sized locally, corpus-batch-sized at scale.
     new_assigned = share_corpus_subtree(
-        _assign_from_rows(new_batch, rows, id_col, vec_col, impl=impl)
+        _assign_from_rows(new_batch, rows, id_col, vec_col)
         .withColumn("__nrm", vnorm(F.col(vec_col)))
     )
     idx = index.select(

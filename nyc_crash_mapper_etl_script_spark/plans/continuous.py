@@ -168,6 +168,13 @@ def continuous_nightly(
             transform=lambda feed: circle_matches(
                 feed, intersections, carry=(CHANGE_COL,)
             ),
+            # what circle_matches reads; the change feed's other ~115
+            # columns never leave the parquet files
+            columns=[
+                "number_of_persons_injured",
+                "number_of_persons_killed",
+                "the_geom",
+            ],
         )
 
     return q_ingest, start_rollup

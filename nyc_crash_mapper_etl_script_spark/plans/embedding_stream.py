@@ -75,8 +75,6 @@ def apply_semantic_batch(
     n_cells: int = 8,
     threshold: float = 0.4,
     max_cluster: int | None = None,
-    impl: str = "arrow",
-    hash_fn: str = "md5",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
@@ -107,11 +105,11 @@ def apply_semantic_batch(
     ins = ins.select(id_col, vec_col)
     if not quantizer.exists():
         quantizer.init(
-            select_centroids(ins, n_cells, id_col, vec_col, hash_fn=hash_fn),
+            select_centroids(ins, n_cells, id_col, vec_col),
             app_txn=(app_id, batch_id),
         )
     cents = quantizer.read(spark)
-    assigned = ivf_assign(ins, cents, id_col, vec_col, impl=impl)
+    assigned = ivf_assign(ins, cents, id_col, vec_col)
     if index.exists():
         # the pool is a PARTITION-PRUNED scan of the stored index:
         # only the cells this batch's vectors were assigned to can
@@ -143,7 +141,6 @@ def apply_semantic_batch(
                 threshold=threshold,
                 id_col=id_col,
                 vec_col=vec_col,
-                impl=impl,
                 max_cluster=max_cluster,
             )
             li = index.last_txn_version(app_id)
@@ -163,7 +160,6 @@ def apply_semantic_batch(
             threshold=threshold,
             id_col=id_col,
             vec_col=vec_col,
-            impl=impl,
             max_cluster=max_cluster,
             centroids=cents,
         )
@@ -227,8 +223,6 @@ def requantize_semantic_index(
     n_cells: int = 8,
     threshold: float = 0.4,
     max_cluster: int | None = None,
-    impl: str = "arrow",
-    hash_fn: str = "md5",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
@@ -273,13 +267,13 @@ def requantize_semantic_index(
     vecs = index.read(spark).select(id_col, vec_col)
     if not _done(quantizer):
         quantizer.overwrite(
-            select_centroids(vecs, n_cells, id_col, vec_col, hash_fn=hash_fn),
+            select_centroids(vecs, n_cells, id_col, vec_col),
             app_txn=(app_id, rebuild_id),
         )
     cents = quantizer.read(spark)
     if not _done(index):
         index.overwrite(
-            ivf_assign(vecs, cents, id_col, vec_col, impl=impl).select(
+            ivf_assign(vecs, cents, id_col, vec_col).select(
                 id_col, vec_col, "cell_id"
             ),
             app_txn=(app_id, rebuild_id),
@@ -291,7 +285,6 @@ def requantize_semantic_index(
                 threshold=threshold,
                 id_col=id_col,
                 vec_col=vec_col,
-                impl=impl,
                 max_cluster=max_cluster,
                 centroids=cents,
             ).select(id_col, "cell_id"),
@@ -309,8 +302,6 @@ def semantic_dedup_stream(
     n_cells: int = 8,
     threshold: float = 0.4,
     max_cluster: int | None = None,
-    impl: str = "arrow",
-    hash_fn: str = "md5",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     starting_version: int = 0,
@@ -368,8 +359,6 @@ def semantic_dedup_stream(
             n_cells=n_cells,
             threshold=threshold,
             max_cluster=max_cluster,
-            impl=impl,
-            hash_fn=hash_fn,
             id_col=id_col,
             vec_col=vec_col,
         )
@@ -417,8 +406,6 @@ def semantic_dedup_stream(
                     n_cells=n_cells,
                     threshold=threshold,
                     max_cluster=max_cluster,
-                    impl=impl,
-                    hash_fn=hash_fn,
                     id_col=id_col,
                     vec_col=vec_col,
                 )

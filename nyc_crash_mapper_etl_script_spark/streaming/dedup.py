@@ -57,7 +57,6 @@ def near_dedup_stream(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.7,
-    base_hash: str = "blake2b",
 ):
     """Continuous NEAR-duplicate suppression: each micro-batch is
     LSH-dedup'd against a band-index TxTable that the stream itself
@@ -99,7 +98,6 @@ def near_dedup_stream(
             text_col=text_col,
             num_perm=num_perm,
             bands=bands,
-            base_hash=base_hash,
         ).localCheckpoint()
         if index_table.exists():
             index = index_table.read(spark)

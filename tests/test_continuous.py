@@ -163,11 +163,22 @@ def test_continuous_nightly_two_batches(spark, tmp_path_factory):
     assert counts() == {1: 1}
 
 
-def test_continuous_nightly_chained_two_streams(spark, tmp_path_factory):
+def test_continuous_nightly_chained_two_streams(spark, tmp_path_factory, monkeypatch):
     """The ingest stream writes only the fact TxTable; the rollup
     stream chained off its commit log keeps rollup == full recompute
     across inserts, a tally update, and a membership-changing update
-    that empties a group."""
+    that empties a group.  The rollup stream's source ships only the
+    three columns circle_matches reads plus the change-feed metadata."""
+    from nyc_crash_mapper_etl_script_spark.plans import continuous
+
+    read_stream, source_columns = continuous.read_txtable_stream, []
+
+    def recording_read(*args, **kw):
+        df = read_stream(*args, **kw)
+        source_columns.append(set(df.columns))
+        return df
+
+    monkeypatch.setattr(continuous, "read_txtable_stream", recording_read)
     feed, _, _, _, run, counts, full = _pipeline(
         spark, tmp_path_factory.mktemp("chained"))
 
@@ -193,6 +204,11 @@ def test_continuous_nightly_chained_two_streams(spark, tmp_path_factory):
     _feed(feed, "b3.jsonl", [_row(104, lat="1.5", lng="1.5", ped_inj="0")])
     run()
     assert counts() == {1: 2} == full()
+
+    assert source_columns == 3 * [{  # one rollup stream per run()
+        "number_of_persons_injured", "number_of_persons_killed", "the_geom",
+        "_change_type", "_commit_version",
+    }]
 
 
 def test_rollup_survives_a_failed_first_commit(spark, tmp_path_factory, monkeypatch):

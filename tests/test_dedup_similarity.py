@@ -250,23 +250,6 @@ def test_ivf_topk_full_probe_equals_bruteforce(embeddings):
     assert full == exact
 
 
-def test_ivf_assign_arrow_equals_column(embeddings):
-    """The Arrow matmul assignment and the literal-centroid column
-    assignment implement the same round-6 argmax contract -- pinned
-    equal so the oracle-parity analysis of one covers both."""
-    from nyc_crash_mapper_etl_script_spark.operators.similarity import (
-        ivf_assign,
-        select_centroids,
-    )
-
-    cents = select_centroids(embeddings, 5, hash_fn="md5")
-    arrow = {r["vec_id"]: r["cell_id"]
-             for r in ivf_assign(embeddings, cents, impl="arrow").collect()}
-    column = {r["vec_id"]: r["cell_id"]
-              for r in ivf_assign(embeddings, cents, impl="column").collect()}
-    assert arrow == column
-
-
 def test_ivf_topk_partial_probe(embeddings):
     from nyc_crash_mapper_etl_script_spark.operators.similarity import (
         ivf_assign,
@@ -305,12 +288,12 @@ def test_ivf_materialized_probe_matches_inplan(embeddings, tmp_path):
 
     spark = embeddings.sparkSession
     path = str(tmp_path / "ivf")
-    ivf_write(embeddings, path, n_cells=5, hash_fn="md5")
+    ivf_write(embeddings, path, n_cells=5)
     q = embeddings.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     from_index = ivf_probe(spark, path, q, k=4, n_probe=2)
-    in_plan = ivf_topk(embeddings, q, k=4, n_cells=5, n_probe=2, hash_fn="md5")
+    in_plan = ivf_topk(embeddings, q, k=4, n_cells=5, n_probe=2)
     key = lambda df: {(r["query_id"], r["rank"]): (r["vec_id"], r["sim"])
                       for r in df.collect()}
     assert key(from_index) == key(in_plan)
@@ -442,7 +425,7 @@ def test_ivf_append_grows_index_without_rewrite(embeddings, tmp_path):
     spark = embeddings.sparkSession
     path = str(tmp_path / "ivf")
     old = embeddings.where(F.col("vec_id") < 20)
-    ivf_write(old, path, n_cells=4, hash_fn="md5")
+    ivf_write(old, path, n_cells=4)
     before_files = set(spark.read.parquet(path).inputFiles())
     new = embeddings.where(F.col("vec_id") >= 20)
     ivf_append(spark, path, new)
@@ -783,8 +766,8 @@ def test_segment_boilerplate_removal_hand_built(spark):
 
 def test_semantic_dedup_hand_built(spark):
     """SemDeDup composition: two planted near-identical pairs prune
-    to their lowest ids; arrow and column assignment paths agree; the
-    join is equi-keyed on cell_id (no cartesian/NLJ)."""
+    to their lowest ids; the join is equi-keyed on cell_id (no
+    cartesian/NLJ)."""
     import math
 
     from nyc_crash_mapper_etl_script_spark.operators.similarity import (
@@ -803,12 +786,9 @@ def test_semantic_dedup_hand_built(spark):
         (5, unit(4.4)),
     ]
     e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for impl in ("column", "arrow"):
-        kept = semantic_dedup(
-            e, n_cells=3, threshold=0.95, impl=impl, hash_fn="md5"
-        )
-        ids = {r["vec_id"] for r in kept.collect()}
-        assert ids == {0, 2, 4, 5}, f"{impl}: {ids}"
+    kept = semantic_dedup(e, n_cells=3, threshold=0.95)
+    ids = {r["vec_id"] for r in kept.collect()}
+    assert ids == {0, 2, 4, 5}, ids
     plan = kept._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -831,21 +811,12 @@ def test_semantic_dedup_max_cluster_caps_candidates(spark):
     )
     uncapped = {
         r["vec_id"]
-        for r in semantic_dedup(
-            e, n_cells=1, threshold=0.99, impl="column", hash_fn="md5"
-        ).collect()
+        for r in semantic_dedup(e, n_cells=1, threshold=0.99).collect()
     }
     assert uncapped == {0}  # keep-lowest-id, everything else pruned
     capped = {
         r["vec_id"]
-        for r in semantic_dedup(
-            e,
-            n_cells=1,
-            threshold=0.99,
-            impl="column",
-            hash_fn="md5",
-            max_cluster=1,
-        ).collect()
+        for r in semantic_dedup(e, n_cells=1, threshold=0.99, max_cluster=1).collect()
     }
     # the single candidate keeps itself and everything below it
     assert min(capped) == 0 and 0 in capped
@@ -875,8 +846,7 @@ def _rand_vectors(n, dim=8, seed=7):
 def test_semantic_dedup_incremental_equals_full_restricted(spark):
     """The exact contract: with stored centroids and monotone ids,
     incremental(new, assign(old), C) == semantic_dedup(old ∪ new,
-    centroids=C) restricted to the new ids -- capped and uncapped,
-    arrow and column assignment paths."""
+    centroids=C) restricted to the new ids -- capped and uncapped."""
     from nyc_crash_mapper_etl_script_spark.operators.similarity import (
         ivf_assign,
         select_centroids,
@@ -888,24 +858,21 @@ def test_semantic_dedup_incremental_equals_full_restricted(spark):
     e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     old = e.where("vec_id < 40")
     new = e.where("vec_id >= 40")
-    cents = select_centroids(old, 4, hash_fn="md5")
-    index = ivf_assign(old, cents, impl="arrow")
-    for impl in ("arrow", "column"):
-        for cap in (None, 3):
-            full = semantic_dedup(
-                e, threshold=0.9, impl=impl, centroids=cents, max_cluster=cap
-            )
-            want = {
-                (r["vec_id"], r["cell_id"])
-                for r in full.where("vec_id >= 40").collect()
-            }
-            got = {
-                (r["vec_id"], r["cell_id"])
-                for r in semantic_dedup_incremental(
-                    new, index, cents, threshold=0.9, impl=impl, max_cluster=cap
-                ).collect()
-            }
-            assert got == want, f"impl={impl} cap={cap}"
+    cents = select_centroids(old, 4)
+    index = ivf_assign(old, cents)
+    for cap in (None, 3):
+        full = semantic_dedup(e, threshold=0.9, centroids=cents, max_cluster=cap)
+        want = {
+            (r["vec_id"], r["cell_id"])
+            for r in full.where("vec_id >= 40").collect()
+        }
+        got = {
+            (r["vec_id"], r["cell_id"])
+            for r in semantic_dedup_incremental(
+                new, index, cents, threshold=0.9, max_cluster=cap
+            ).collect()
+        }
+        assert got == want, f"cap={cap}"
     # equi-keyed prune: no cartesian/NLJ in the incremental plan
     plan = (
         semantic_dedup_incremental(new, index, cents, threshold=0.9)
@@ -938,15 +905,13 @@ def test_semantic_dedup_incremental_parquet_index_multibatch(spark, tmp_path):
 
     cdir = str(tmp_path / "centroids")
     idir = str(tmp_path / "index")
-    select_centroids(base, 4, hash_fn="md5").write.parquet(cdir)
+    select_centroids(base, 4).write.parquet(cdir)
     cents = spark.read.parquet(cdir)
-    ivf_assign(base, cents, impl="arrow").write.parquet(idir)
+    ivf_assign(base, cents).write.parquet(idir)
 
     kept0 = {
         r["vec_id"]
-        for r in semantic_dedup(
-            base, threshold=0.9, impl="arrow", centroids=cents
-        ).collect()
+        for r in semantic_dedup(base, threshold=0.9, centroids=cents).collect()
     }
 
     # batch 1: dedup against the stored index, then append its assignment
@@ -954,25 +919,23 @@ def test_semantic_dedup_incremental_parquet_index_multibatch(spark, tmp_path):
     kept1 = {
         r["vec_id"]
         for r in semantic_dedup_incremental(
-            b1, index, cents, threshold=0.9, impl="arrow"
+            b1, index, cents, threshold=0.9
         ).collect()
     }
-    ivf_assign(b1, cents, impl="arrow").write.mode("append").parquet(idir)
+    ivf_assign(b1, cents).write.mode("append").parquet(idir)
 
     # batch 2 against base ∪ b1
     index = spark.read.parquet(idir)
     kept2 = {
         r["vec_id"]
         for r in semantic_dedup_incremental(
-            b2, index, cents, threshold=0.9, impl="arrow"
+            b2, index, cents, threshold=0.9
         ).collect()
     }
 
     full = {
         r["vec_id"]
-        for r in semantic_dedup(
-            e, threshold=0.9, impl="arrow", centroids=cents
-        ).collect()
+        for r in semantic_dedup(e, threshold=0.9, centroids=cents).collect()
     }
     # per-batch results == full-corpus run restricted to each range
     assert kept1 == {i for i in full if 50 <= i < 70}

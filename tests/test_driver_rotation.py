@@ -13,7 +13,10 @@ import glob
 import json
 import os
 
+import duckdb
+
 from nyc_crash_mapper_etl_script_spark import harness
+from nyc_crash_mapper_etl_script_spark.schemas import TESTDATA_TABLES
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -38,6 +41,26 @@ def test_head_rows_are_all_full_value_oracle_twinned():
 def test_oracle_sql_order_matches_queries_order():
     q = [n for n in harness.queries() if n in harness.oracle_sql()]
     assert q == list(harness.oracle_sql())
+
+
+def test_no_oracle_returns_a_128_bit_column():
+    """DuckDB widens ``sum`` over BIGINT to HUGEINT (over DECIMAL to
+    DECIMAL(38, s)), a type class Spark's ``long`` sums never return,
+    so the twin's values may hash unlike the row's while rows and
+    schema match; ``CAST(sum(...) AS BIGINT)`` is the fix.  Each
+    oracle is only bound, which resolves its result types unrun."""
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        path = f"/root/testdata/sf0.001/{t}.parquet"
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    wide = []
+    for name, sql in harness.oracle_sql().items():
+        rel = con.sql(sql)
+        for col, typ in zip(rel.columns, map(str, rel.types)):
+            if typ in ("HUGEINT", "UHUGEINT") or typ.startswith("DECIMAL(38"):
+                wide.append((name, col, typ))
+    assert not wide, wide
 
 
 def test_rotation_actually_advances_coverage():

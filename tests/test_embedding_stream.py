@@ -59,7 +59,6 @@ def _drain(spark, env):
         env["ckpt"],
         n_cells=2,
         threshold=0.95,
-        impl="column",
     )
     q.awaitTermination(300)
 
@@ -81,7 +80,7 @@ def test_streamed_kept_equals_full_recompute(spark, env):
         return {
             r["vec_id"]
             for r in semantic_dedup(
-                _vecs(spark, 0, hi), threshold=0.95, impl="column", centroids=cents
+                _vecs(spark, 0, hi), threshold=0.95, centroids=cents
             ).collect()
         }
 
@@ -102,7 +101,7 @@ def test_streamed_kept_equals_full_recompute(spark, env):
     cents = env["quantizer"].read(spark)
     want = {
         (r["vec_id"], r["cell_id"])
-        for r in ivf_assign(_vecs(spark, 0, 40), cents, impl="column").collect()
+        for r in ivf_assign(_vecs(spark, 0, 40), cents).collect()
     }
     got = {(r["vec_id"], r["cell_id"]) for r in idx.collect()}
     assert got == want
@@ -128,7 +127,7 @@ def test_prune_pool_is_partition_pruned(spark, env):
     # a batch whose vectors all land in ONE cell
     cents = env["quantizer"].read(spark)
     b = _vecs(spark, 20, 26)
-    assigned = ivf_assign(b, cents, impl="column")
+    assigned = ivf_assign(b, cents)
     one_cell = [
         r["cell_id"]
         for r in assigned.groupBy("cell_id").count()
@@ -145,7 +144,7 @@ def test_prune_pool_is_partition_pruned(spark, env):
     full_kept = {
         r["vec_id"]
         for r in semantic_dedup_incremental(
-            sub, index.read(spark), cents, threshold=0.95, impl="column"
+            sub, index.read(spark), cents, threshold=0.95
         ).collect()
     }
     pruned_kept = {
@@ -155,7 +154,6 @@ def test_prune_pool_is_partition_pruned(spark, env):
             index.read_partitions(spark, "cell_id", one_cell),
             cents,
             threshold=0.95,
-            impl="column",
         ).collect()
     }
     assert pruned_kept == full_kept
@@ -185,12 +183,12 @@ def test_requantize_rebuild_equals_full_run(spark, env):
 
     requantize_semantic_index(
         spark, env["quantizer"], env["index"], env["kept"],
-        rebuild_id=1, n_cells=2, threshold=0.95, impl="column",
+        rebuild_id=1, n_cells=2, threshold=0.95,
     )
     allv = _vecs(spark, 0, 36)
     want_cents = {
         (r["cell_id"], tuple(r["cv"]))
-        for r in select_centroids(allv, 2, hash_fn="md5").collect()
+        for r in select_centroids(allv, 2).collect()
     }
     got_cents = {
         (r["cell_id"], tuple(r["cv"]))
@@ -200,7 +198,7 @@ def test_requantize_rebuild_equals_full_run(spark, env):
     new_cents = env["quantizer"].read(spark)
     want_idx = {
         (r["vec_id"], r["cell_id"])
-        for r in ivf_assign(allv, new_cents, impl="column").collect()
+        for r in ivf_assign(allv, new_cents).collect()
     }
     got_idx = {
         (r["vec_id"], r["cell_id"]) for r in env["index"].read(spark).collect()
@@ -209,7 +207,7 @@ def test_requantize_rebuild_equals_full_run(spark, env):
     want_kept = {
         r["vec_id"]
         for r in semantic_dedup(
-            allv, threshold=0.95, impl="column", centroids=new_cents
+            allv, threshold=0.95, centroids=new_cents
         ).collect()
     }
     assert _kept_ids(spark, env) == want_kept, "kept != full run, new centroids"
@@ -225,7 +223,7 @@ def test_requantize_rebuild_equals_full_run(spark, env):
     vk = env["kept"]._snapshot_version()
     requantize_semantic_index(
         spark, env["quantizer"], env["index"], env["kept"],
-        rebuild_id=1, n_cells=2, threshold=0.95, impl="column",
+        rebuild_id=1, n_cells=2, threshold=0.95,
     )
     assert (vq, vi, vk) == (
         env["quantizer"]._snapshot_version(),
@@ -241,14 +239,13 @@ def test_requantize_rebuild_equals_full_run(spark, env):
         select_centroids(
             env["index"].read(spark).select("vec_id", "embedding"),
             2,
-            hash_fn="md5",
         ),
         app_txn=(app_id, 2),
     )
     vq2 = env["quantizer"]._snapshot_version()
     requantize_semantic_index(
         spark, env["quantizer"], env["index"], env["kept"],
-        rebuild_id=2, n_cells=2, threshold=0.95, impl="column",
+        rebuild_id=2, n_cells=2, threshold=0.95,
     )
     assert env["quantizer"]._snapshot_version() == vq2, "quantizer redone"
     assert _kept_ids(spark, env) == want_kept
@@ -264,7 +261,7 @@ def test_requantize_rebuild_equals_full_run(spark, env):
     want_resumed = {
         r["vec_id"]
         for r in semantic_dedup(
-            _vecs(spark, 0, 44), threshold=0.95, impl="column", centroids=cents3
+            _vecs(spark, 0, 44), threshold=0.95, centroids=cents3
         ).collect()
     }
     assert _kept_ids(spark, env) == want_resumed
@@ -306,20 +303,20 @@ def test_crash_between_index_and_kept_commits(spark, env):
 
     apply_semantic_batch(
         spark, b0, 0, app_id, env["quantizer"], env["index"], env["kept"],
-        n_cells=2, threshold=0.95, impl="column",
+        n_cells=2, threshold=0.95,
     )
     cents = env["quantizer"].read(spark)
     want_kept = {
         r["vec_id"]
         for r in semantic_dedup(
-            _vecs(spark, 0, 28), threshold=0.95, impl="column", centroids=cents
+            _vecs(spark, 0, 28), threshold=0.95, centroids=cents
         ).collect()
     }
 
     # simulate the crash: batch 1's assignment lands in the index
     # with its app_txn, then the process dies before the kept append
     env["index"].append(
-        ivf_assign(b1, cents, impl="column").select(
+        ivf_assign(b1, cents).select(
             "vec_id", "embedding", "cell_id"
         ),
         app_txn=(app_id, 1),
@@ -329,7 +326,7 @@ def test_crash_between_index_and_kept_commits(spark, env):
     # Spark replays micro-batch 1
     apply_semantic_batch(
         spark, b1, 1, app_id, env["quantizer"], env["index"], env["kept"],
-        n_cells=2, threshold=0.95, impl="column",
+        n_cells=2, threshold=0.95,
     )
     assert env["index"]._snapshot_version() == vi, "index appended twice"
     assert env["index"].read(spark).count() == 28
@@ -339,7 +336,7 @@ def test_crash_between_index_and_kept_commits(spark, env):
     vk = env["kept"]._snapshot_version()
     apply_semantic_batch(
         spark, b1, 1, app_id, env["quantizer"], env["index"], env["kept"],
-        n_cells=2, threshold=0.95, impl="column",
+        n_cells=2, threshold=0.95,
     )
     assert env["kept"]._snapshot_version() == vk
 
@@ -358,14 +355,14 @@ def test_drift_triggered_requantize_equals_manual(spark, env, tmp_path_factory):
     env["source"].init(_vecs(spark, 0, 20))
     q = semantic_dedup_stream(
         spark, env["source"], env["quantizer"], env["index"], env["kept"],
-        env["ckpt"], n_cells=2, threshold=0.95, impl="column",
+        env["ckpt"], n_cells=2, threshold=0.95,
         requantize_drift_threshold_e6=0,
     )
     q.awaitTermination(300)
     env["source"].append(_vecs(spark, 20, 36))
     q = semantic_dedup_stream(
         spark, env["source"], env["quantizer"], env["index"], env["kept"],
-        env["ckpt"], n_cells=2, threshold=0.95, impl="column",
+        env["ckpt"], n_cells=2, threshold=0.95,
         requantize_drift_threshold_e6=0,
     )
     q.awaitTermination(300)
@@ -381,11 +378,11 @@ def test_drift_triggered_requantize_equals_manual(spark, env, tmp_path_factory):
         apply_semantic_batch(
             spark, _vecs(spark, lo, hi), bid, "manual_app",
             man["quantizer"], man["index"], man["kept"],
-            n_cells=2, threshold=0.95, impl="column",
+            n_cells=2, threshold=0.95,
         )
         requantize_semantic_index(
             spark, man["quantizer"], man["index"], man["kept"],
-            rebuild_id=bid, n_cells=2, threshold=0.95, impl="column",
+            rebuild_id=bid, n_cells=2, threshold=0.95,
         )
 
     def snap(t, cols):
@@ -444,14 +441,14 @@ def test_armed_stream_resumes_half_done_rebuild(spark, env):
     requant_app = f"semantic_requant:{os.path.abspath(env['index'].root)}"
     vecs = env["index"].read(spark).select("vec_id", "embedding")
     env["quantizer"].overwrite(
-        select_centroids(vecs, 2, hash_fn="md5"), app_txn=(requant_app, 7)
+        select_centroids(vecs, 2), app_txn=(requant_app, 7)
     )
     # index assignments are now STALE vs the new quantizer, kept too
 
     env["source"].append(_vecs(spark, 20, 24))
     q = semantic_dedup_stream(
         spark, env["source"], env["quantizer"], env["index"], env["kept"],
-        env["ckpt"], n_cells=2, threshold=0.95, impl="column",
+        env["ckpt"], n_cells=2, threshold=0.95,
         # absurdly high: the signal alone would NEVER trigger
         requantize_drift_threshold_e6=10**12,
     )
@@ -467,7 +464,7 @@ def test_armed_stream_resumes_half_done_rebuild(spark, env):
     want_idx = {
         (r["vec_id"], r["cell_id"])
         for r in ivf_assign(
-            _vecs(spark, 0, 24), cents, impl="column"
+            _vecs(spark, 0, 24), cents
         ).collect()
     }
     got_idx = {
@@ -477,7 +474,7 @@ def test_armed_stream_resumes_half_done_rebuild(spark, env):
     want_kept = {
         r["vec_id"]
         for r in semantic_dedup(
-            _vecs(spark, 0, 24), threshold=0.95, impl="column", centroids=cents
+            _vecs(spark, 0, 24), threshold=0.95, centroids=cents
         ).collect()
     }
     assert _kept_ids(spark, env) == want_kept

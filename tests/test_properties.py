@@ -488,8 +488,8 @@ def test_semantic_incremental_equals_full_on_random_corpora(
     split point, and threshold, semantic_dedup_incremental(new,
     assign(old), stored centroids) == full-corpus semantic_dedup with
     the same centroids restricted to new ids, and base ∪ batch keeps
-    partition the corpus keeps exactly (column impl: deterministic,
-    oracle-parity arithmetic)."""
+    partition the corpus keeps exactly (round-6 argmax assignment:
+    deterministic, oracle-parity arithmetic)."""
     from nyc_crash_mapper_etl_script_spark.operators.similarity import (
         ivf_assign,
         select_centroids,
@@ -502,27 +502,26 @@ def test_semantic_incremental_equals_full_on_random_corpora(
     e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     old = e.where(f"vec_id < {split}")
     new = e.where(f"vec_id >= {split}")
-    cents = select_centroids(old, 2, hash_fn="md5")
+    cents = select_centroids(old, 2)
     full = {
         r["vec_id"]
         for r in semantic_dedup(
-            e, threshold=threshold, impl="column", centroids=cents
+            e, threshold=threshold, centroids=cents
         ).collect()
     }
     base = {
         r["vec_id"]
         for r in semantic_dedup(
-            old, threshold=threshold, impl="column", centroids=cents
+            old, threshold=threshold, centroids=cents
         ).collect()
     }
     inc = {
         r["vec_id"]
         for r in semantic_dedup_incremental(
             new,
-            ivf_assign(old, cents, impl="column"),
+            ivf_assign(old, cents),
             cents,
             threshold=threshold,
-            impl="column",
         ).collect()
     }
     assert inc == {i for i in full if i >= split}
